@@ -4,7 +4,7 @@
 
 Run from the repository root. Starts a SparkSession on local[nproc],
 sets up the workload's inputs several times (``setup_s`` takes the
-median), warms up with one operation, then runs operations for
+median), warms up (see the workload's ``warm``), then runs operations for
 ``--seconds`` and checks every output. The last line of standard output
 is one JSON object: the end-to-end metrics with ``--trace 0``, the
 per-layer metrics (from spans, see tracing.py) with ``--trace 1``.
@@ -147,7 +147,7 @@ def run(args, root: str, work: str) -> dict:
         secs = [s for s, _ in samples]
         metrics = {
             "setup_s": {"value": session_s + statistics.median(setup_times) + warm_s, "unit": "s"},
-            "work_per_s": {"value": sum(w for _, w in samples) / sum(secs), "unit": "1/s"},
+            "work_per_s": {"value": statistics.median(w / s for s, w in samples), "unit": "1/s"},
             "op_p50_s": {"value": statistics.median(secs), "unit": "s"},
             "peak_rss_mb": {"value": peak_mb, "unit": "MB"},
         }
@@ -174,7 +174,7 @@ def main(argv=None) -> int:
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
     try:
         result = run(args, root, work)
     finally:

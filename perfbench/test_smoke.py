@@ -48,3 +48,10 @@ def test_workload_emits_every_metric(workload, trace):
         # the search loop runs Spark-free
         assert res["metrics"]["search.spark_jobs"]["value"] == 0
         assert res["metrics"]["search.calls"]["value"] > 0
+    if trace and workload == "snapshot_append":
+        # construction layers and the distributed scoring layers, degrees
+        # included, all run inside the measured operation
+        for layer in ("pipeline.materialize", "operators.delta", "operators.bgp",
+                      "operators.prune", "operators.mdl_ops", "operators.degrees"):
+            assert res["metrics"][f"{layer}.calls"]["value"] > 0, layer
+        assert res["metrics"]["operators.degrees.spark_jobs"]["value"] > 0

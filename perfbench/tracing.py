@@ -70,7 +70,6 @@ SPARK_LAYERS = (
 
 # methods wrapped besides the public module-level functions
 METHODS = {
-    "operators.bgp": {"GraphStore": ("__init__",)},
     "operators.mdl_ops": {"GraphDegrees": ("__init__", "driver_arrays")},
     "operators.localgraph": {
         "LocalGraph": ("find_rows", "incident", "degree_arrays")
