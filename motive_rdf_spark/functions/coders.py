@@ -120,6 +120,17 @@ def py_store_hist_opt(hist: dict[int, int]) -> float:
     best (d, θ) over a small grid + the cost of the grid index."""
     if not hist:
         return 0.0
+    return _py_store_items_opt(tuple(hist.items()))
+
+
+@lru_cache(maxsize=4096)
+def _py_store_items_opt(items: tuple[tuple[int, int], ...]) -> float:
+    # keyed on the items in dict order: py_store_hist sums its float
+    # terms in that order, so a key that forgot it could hand one
+    # ordering the last-bit-different total of another. The callers'
+    # histograms (pattern_bits over a pattern of <= 10 edges) take few
+    # distinct values, so the grid search runs once per histogram.
+    hist = dict(items)
     best = min(
         py_store_hist(hist, d, t) for d in _PY_GRID_D for t in _PY_GRID_T
     )

@@ -110,9 +110,10 @@ def find_delta(
     cached probe), so a delta that touches only some relations costs
     only those cascades (VERDICT r4 item 4) — and the cache is read k
     times instead of re-deriving the anti-join per run. The returned
-    DataFrame exposes the cached delta as ``._delta_cached`` so
-    callers that fully consume the result (``delta_support``) can
-    unpersist it; leaving it cached is harmless (it is |Δ|-sized)."""
+    DataFrame exposes the cached delta as ``._delta_cached``; whoever
+    consumes the result owns it and must unpersist it, or every call
+    leaves one cached frame behind. Callers that only need the count
+    use ``delta_support``, which does."""
     if not pattern.edges:
         raise ValueError("empty pattern")
     store = old if isinstance(old, GraphStore) else None

@@ -11,7 +11,8 @@ contract (SURVEY.md §4.4).
 Two implementations:
 
 - ``prune_matches``       — exact driver replica over collected rows
-  (the safe default at fixture scale, ≤10⁵ matches);
+  (the safe default at fixture scale, ≤10⁵ matches): the sequential
+  scan over dense triple ids built with numpy;
 - ``prune_matches_df``    — distributed greedy-chain fixpoint: rank
   matches by canonical key, then repeat { keep every instance that is
   rank-minimal on ALL its triples among still-active instances; kill
@@ -25,6 +26,7 @@ Two implementations:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from motive_rdf_spark.patterns import Pattern, var_col
@@ -40,16 +42,39 @@ def prune_matches(
 ) -> list[list[int]]:
     """Exact replica of MotifCode.prune (MotifCode.java:418-436) over a
     driver-side match list. ``seen`` may be shared across patterns to get
-    pruneValues semantics (MotifCode.java:378-408)."""
-    if seen is None:
-        seen = set()
-    kept: list[list[int]] = []
-    for inst in matches:
-        triples = pattern.triples(list(inst))
-        if not any(t in seen for t in triples):
-            kept.append(list(inst))
-            seen.update(triples)
-    return kept
+    pruneValues semantics (MotifCode.java:378-408): instances touching
+    a triple in it are dropped, and the kept instances' triples are
+    added to it."""
+    k = len(matches)
+    if k == 0:
+        return []
+    rows = np.asarray(matches, dtype=np.int64).reshape(k, pattern.num_vars)
+    terms = [
+        rows[:, -t - 1] if t < 0 else np.full(k, t, dtype=np.int64)
+        for e in pattern.edges
+        for t in e
+    ]
+    spo = np.stack(terms, axis=1).reshape(-1, 3)  # (k * edges, 3)
+    # dense triple ids: lexicographic sort, then a new id at each change
+    order = np.lexsort(spo.T[::-1])
+    srt = spo[order]
+    new = np.ones(len(srt), dtype=bool)
+    new[1:] = (srt[1:] != srt[:-1]).any(axis=1)
+    tid = np.empty(len(srt), dtype=np.int64)
+    tid[order] = np.cumsum(new) - 1
+    triples = srt[new]
+    tid = tid.reshape(k, -1)
+    taken = set()
+    if seen:
+        taken = {i for i, t in enumerate(map(tuple, triples.tolist())) if t in seen}
+    kept = []
+    for i, t in enumerate(tid.tolist()):
+        if taken.isdisjoint(t):
+            taken.update(t)
+            kept.append(i)
+    if seen is not None:
+        seen.update(map(tuple, triples[np.unique(tid[kept])].tolist()))
+    return rows[kept].tolist()
 
 
 def instance_triples_df(pattern: Pattern, matches: DataFrame) -> DataFrame:

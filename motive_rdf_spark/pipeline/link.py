@@ -143,11 +143,15 @@ def link_mentions(
     # common case for code-entity linking against a complete symbol
     # dictionary), skip the fuzzy residual plan entirely — it would
     # broadcast a 3x-replicated candidate table and build per-mention
-    # block structs for zero rows. The probe materializes `best` into
-    # the cache, so the caller's downstream consumption reuses it
-    # instead of re-running the join (cleaned up by the ContextCleaner
-    # when the result goes out of scope).
-    best = best.persist()
+    # block structs for zero rows. `best` is materialized as a local
+    # checkpoint, so the probe and the caller's downstream consumption
+    # reuse it instead of re-running the join; the ContextCleaner
+    # reclaims it when the result goes out of scope (a persist() would
+    # hold a cache entry per call until someone unpersisted it). The
+    # trade: a lost executor's checkpoint blocks cannot be recomputed,
+    # so the job fails instead of recovering, as with every other
+    # localCheckpoint in the engine.
+    best = best.localCheckpoint(eager=True)
     rest = best.filter(F.col("entity_id").isNull()).select("mention")
     if rest.isEmpty():
         return best.filter(F.col("score") >= min_score)

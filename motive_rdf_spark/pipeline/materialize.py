@@ -356,7 +356,7 @@ def _maintain_motif_supports(spark, st, snapshot: str, motifs, rep) -> None:
     after each snapshot (pinned by tests/test_pipeline.py) because the
     delta matcher strips triples already present in the accumulated
     deduped graph — the same dedup rule ``load_graph`` applies."""
-    from motive_rdf_spark.operators.delta import find_delta
+    from motive_rdf_spark.operators.delta import delta_support
 
     all_triples = st.read("triples")
     cur = all_triples.filter(F.col("snapshot") == snapshot).select("s", "p", "o")
@@ -392,7 +392,7 @@ def _maintain_motif_supports(spark, st, snapshot: str, motifs, rep) -> None:
             prior[r["motif"]] = int(r["support"])
     rows = []
     for name, pat in motifs.items():
-        d = find_delta(old, cur, pat).count()
+        d = delta_support(old, cur, pat)
         total = prior.get(name, 0) + d
         rep.motif_supports[name] = total
         rows.append((snapshot, name, total, d))

@@ -87,13 +87,16 @@ class SAConfig:
     retain: int = 100  # MaxObserver RETAIN (MultiParallel.java:25)
     seed: int | None = None
     # collect graphs up to LOCAL_GRAPH_LIMIT triples into an indexed
-    # driver-side table so each candidate evaluation is pure-Python
+    # driver-side table so each candidate evaluation is Spark-free
     # (operators/localgraph.py); False forces the distributed matcher
     local_graph: bool = True
-    # deterministic work budget for the LocalGraph matcher: cap on
-    # candidate-row attempts per match job. Plays the same role as
-    # max_time_s (the reference's Find.java:59-69 budget) but is
-    # load-independent, so fixed-seed searches reproduce exactly.
+    # deterministic work budget for the LocalGraph matcher: the
+    # candidate rows of each visited node of the depth-first match
+    # enumeration, summed in depth-first order; enumeration stops at
+    # the first node past it (operators/localgraph.py). Plays the same
+    # role as max_time_s (the reference's Find.java:59-69 budget) but
+    # is load-independent, so fixed-seed searches reproduce exactly;
+    # with it set and max_time_s unset no wall clock touches a chain.
     max_steps: int | None = None
     # True = Prior.COMPLETE_FAST template coder; False = the exact
     # Pitman-Yor COMPLETE coder the reference's experiments default to
@@ -246,7 +249,9 @@ class SimAnnealing:
         """Driver-tier candidate evaluation: LocalGraph match ->
         prune_matches -> score_motif_rows, no Spark involvement. Same
         row budget (max_matches) and wall-clock budget (max_time_s ->
-        partial matches + timed_out metric) as the distributed path."""
+        partial matches + timed_out metric) as the distributed path;
+        with max_steps set, the step budget bounds the match and the
+        deadline is checked only before it starts (LocalGraph.find_rows)."""
         import time as _time
 
         st = self.state
@@ -298,14 +303,20 @@ class SimAnnealing:
             if self._local is not None:
                 # budget the sampling enumeration too: a pathological
                 # accepted pattern (alpha accepts regardless of score)
-                # must not stall the loop hunting for its 20th match
+                # must not stall the loop hunting for its 20th match.
+                # A step budget already does that deterministically; a
+                # wall-clock deadline on top would let a slow host change
+                # a fixed-seed trajectory, so it applies only when asked
+                # for (max_time_s) or when no step budget is set.
                 import time as _time
 
-                budget = self.cfg.max_time_s or 5.0
+                deadline = None
+                if self.cfg.max_time_s is not None or self.cfg.max_steps is None:
+                    deadline = _time.monotonic() + (self.cfg.max_time_s or 5.0)
                 rows, _ = self._local.find_rows(
                     pattern,
                     max_rows=self.cfg.sample_rows,
-                    deadline=_time.monotonic() + budget,
+                    deadline=deadline,
                     max_steps=self.cfg.max_steps,
                 )
             else:
@@ -556,12 +567,17 @@ def sa_parallel_local(
     init_pattern: Pattern | None = None,
 ) -> SAState:
     """N independent chains as forked processes over one shared
-    in-memory graph (copy-on-write: the arrays and indexes are built
-    once and never copied). The LocalGraph tier is pure Python and
-    therefore GIL-bound — ``sa_parallel``'s driver THREADS parallelize
-    Spark jobs, not Python loops, so pure-local chains need processes.
-    Chains never touch Spark (SimAnnealing in LocalGraph mode runs
-    Spark-free), making the fork safe with an active session."""
+    in-memory graph (copy-on-write: the arrays and sorted-key indexes
+    are built once and never copied). A chain's matcher, prune and
+    scorer are numpy array code, but the loop around them — transitions,
+    canonicalization, the score memo — is Python and holds the GIL;
+    ``sa_parallel``'s driver THREADS parallelize Spark jobs, not Python
+    loops, so pure-local chains need processes. Chains never touch
+    Spark (SimAnnealing in LocalGraph mode runs Spark-free), making
+    the fork safe with an active session. Chain ``i`` runs with seed
+    ``config.seed + i``; with ``max_steps`` set (and no ``max_time_s``)
+    the merged result depends on the arguments alone, whatever the
+    host's load."""
     import multiprocessing as mp
 
     global _LOCAL_CHAIN_ARGS

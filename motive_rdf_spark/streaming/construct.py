@@ -136,7 +136,7 @@ def run_support_stream(
     this sink keys its idempotence on those ids."""
     from pyspark.sql import functions as F
 
-    from motive_rdf_spark.operators.delta import find_delta
+    from motive_rdf_spark.operators.delta import delta_support
     from motive_rdf_spark.pipeline.extract import extract_triples
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -170,7 +170,7 @@ def run_support_stream(
 
                 d = find(new_enc, pat).count()
             else:
-                d = find_delta(old, new_enc, pat, assume_new=True).count()
+                d = delta_support(old, new_enc, pat, assume_new=True)
             prior = 0
             if sup_tbl is not None:
                 r = (
