@@ -1,8 +1,9 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Backed by ``motive_rdf_spark.contract`` — every implemented operator
-from SURVEY.md §2 is registered there as a (spark_query, oracle_sql)
-pair; this module adapts that registry to the driver's interface.
+Backed by ``motive_rdf_spark.contract`` — the KG-construction and
+motif-induction operators are registered there as (spark_query,
+oracle_sql) pairs; this module exposes that registry as ``queries()``
+and ``oracle_sql()``.
 """
 
 from __future__ import annotations
@@ -22,14 +23,14 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per contract operator, in registration order."""
     from motive_rdf_spark.contract import registry
 
     return {name: fn for name, (fn, _) in registry().items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (omitted => rows-only check)."""
+    """DuckDB-equivalent SQL per query."""
     from motive_rdf_spark.contract import registry
 
-    return {name: sql for name, (_, sql) in registry().items() if sql is not None}
+    return {name: sql for name, (_, sql) in registry().items()}

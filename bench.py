@@ -37,27 +37,6 @@ def main() -> None:
         "bgp_support_by_nation",
         "degrees_in",
         "dict_encode",
-        "q1_pricing_summary",
-        "top_customers",
-        "sessionize",
-        "dedup_exact",
-        "embedding_norm",
-        "ngram_jaccard",
-        "simhash_fingerprint",
-        "minhash_dedup",
-        "lsh_ann",
-        "cosine_topk",
-        "lm_bigram_score",
-        "boilerplate_ngrams",
-        "max_dup_span",
-        "khop_reachability",
-        "pagerank_entities",
-        "winnow_profile",
-        "asof_join_events",
-        "range_join_events",
-        "bm25_retrieval",
-        "centroid_cosine",
-        "streaming_windowed_counts",
     ]
     # best-of-N per query: this host shows ~27% run-to-run spread
     # (BENCH/BASELINE.md), so single-run numbers aren't actionable —
@@ -70,8 +49,6 @@ def main() -> None:
     import statistics
 
     for name in headline:
-        if name not in reg:
-            continue
         fn, _ = reg[name]
         samples: list[float] = []
         # sub-2s queries get extra runs: at that scale the host's

@@ -268,7 +268,7 @@ def code_corpus_table(spark: SparkSession, rows: int, seed: int = 42, hash_fn: s
     - a final line of ``'x' * (pick(12) % 180 + 5)`` (long-line signal).
 
     Entirely native expressions; ``hash_fn="md5"`` makes the table
-    byte-identical reconstructable in DuckDB (oracles.code_quality_sql).
+    byte-identical reconstructable in DuckDB.
     """
     df = spark.range(rows).withColumnRenamed("id", "k")
 

@@ -3,7 +3,7 @@ training-data-pipeline operators a 100 TB corpus needs. All native
 Spark expressions (JVM-side, whole-stage-codegen); no Python in any
 hot path.
 
-- exact dedup            — hash-groupBy (contract.dedup_exact)
+- exact dedup            — hash-groupBy
 - word n-grams           — shingling primitive
 - n-gram Jaccard         — exact pairwise similarity via shingle
                            inverted index (explode → self-join →
@@ -168,7 +168,7 @@ def minhash_signatures(
     ``hash_fn="md5"``: engine-portable *affine* family — ONE md5 per
     shingle split into two hex lanes a (15 chars, <2^60) and b
     (13 chars, <2^52), then h_i = a + (seed+i)*b. Any engine with md5
-    computes identical signatures (oracles.minhash_dedup_sql), and the
+    computes identical signatures, and the
     md5 cost is per-shingle, not per-(shingle, i): overflow-free since
     (seed+i) < 100 keeps h_i under 2^61."""
 
@@ -296,7 +296,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     (±1) votes from word-hash bit j is positive. DataFrame[id_col, sh].
 
     md5 (not xxhash64) so the ANSI-SQL oracle reproduces fingerprints
-    bit-for-bit (contract.simhash_fingerprint)."""
+    bit-for-bit (:func:`simhash_sql`)."""
     words = docs.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), r"\s+")).alias("w")
     ).filter(F.length("w") > 0).dropDuplicates([id_col, "w"])

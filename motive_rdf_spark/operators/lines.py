@@ -8,8 +8,7 @@ Reference parity note: the reference engine consumes already-clean RDF
 and has no text-cleaning layer; these are beyond-reference
 training-data operators the graft adds for its code payload
 (north_star: "Iceberg table of source-code repositories"), sharing the
-code_corpus_table fixture + byte-identical DuckDB reconstruction
-oracle with operators/codequality.py.
+code_corpus_table fixture with operators/codequality.py.
 
 Scale design (10^12 files):
 

@@ -11,8 +11,7 @@ parametrization with the +1 idf floor):
                   idf(t) * tf_td * (k1 + 1)
                   / (tf_td + k1 * (1 - b + b * dl_d / avgdl))
 
-Tokenizer: single-space split — the corpus contract shared with
-contract.token_count / operators/lm.py, so the oracle stays portable.
+Tokenizer: single-space split, so the oracle stays portable.
 
 Reference parity note: beyond-reference training-data operator (the
 reference has no text/retrieval layer).

@@ -90,7 +90,7 @@ def _hyperplane(plane: int, dim: int, seed: int, hash_fn: str = "xx") -> Column:
     """Deterministic pseudo-random hyperplane as an array<double> column:
     component j = (hash(seed, plane, j) % 2001 - 1000) / 1000.
     ``hash_fn="md5"`` uses the engine-portable hash so the DuckDB oracle
-    regenerates the identical plane matrix (oracles.lsh_ann_sql)."""
+    regenerates the identical plane matrix."""
     from motive_rdf_spark.data.generators import seeded_hash
 
     return F.transform(

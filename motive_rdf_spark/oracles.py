@@ -1,12 +1,12 @@
 """Generated DuckDB oracle SQL for the contract entries whose inputs
 are synthesized fixtures (no parquet table to query).
 
-Pattern (proven by operators/dedup.simhash_sql): the fixture generators
-offer an engine-portable hash mode (``hash_fn="md5"`` —
-data/generators.seeded_hash), so the oracle SQL can *reconstruct the
-identical input* from ``generate_series`` + ``md5`` and then compute
-the expected output independently (closed-form fixture semantics or
-plain SQL re-implementations — never by calling this engine).
+Pattern: the fixture generators offer an engine-portable hash mode
+(``hash_fn="md5"`` — data/generators.seeded_hash), so the oracle SQL
+can *reconstruct the identical input* from ``generate_series`` +
+``md5`` and then compute the expected output independently
+(closed-form fixture semantics or plain SQL re-implementations —
+never by calling this engine).
 
 Every function here returns a complete DuckDB query string used by
 contract.py as the driver's oracle.
@@ -167,183 +167,6 @@ FROM generate_series(0, {rows - 1}) t(id)
 GROUP BY 1"""
 
 
-def minhash_dedup_sql(
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 42,
-    threshold: float = 0.5,
-    table: str = "documents",
-) -> str:
-    """Full MinHash-LSH pipeline re-computed in SQL: word-3-gram
-    shingles → per-doc min of every portable hash → banded bucket
-    strings → candidate pairs → exact-Jaccard verification at the same
-    (rounded) threshold. Mirrors minhash_dedup_pairs(hash_fn="md5")
-    term by term but shares no code with it."""
-    r = num_hashes // bands
-    # affine portable family (dedup.minhash_signatures md5 mode): one
-    # md5 per shingle, lanes a/b, h_i = a + (seed+i)*b
-    a = "(('0x' || substring(md5(shingle), 1, 15))::BIGINT)"
-    b = "(('0x' || substring(md5(shingle), 16, 13))::BIGINT)"
-    mins = ",\n    ".join(
-        f"MIN({a} + {seed + i} * {b}) AS h{i}" for i in range(num_hashes)
-    )
-    band_rows = "\n  UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, concat_ws(',', {hs}) AS bucket FROM sigs".format(
-            b=b, hs=", ".join(f"h{b * r + j}" for j in range(r))
-        )
-        for b in range(bands)
-    )
-    return rf"""
-WITH words AS (
-  SELECT doc_id, string_split_regex(text, '\s+') AS w FROM {table}
-), idx AS (
-  SELECT doc_id, w, unnest(generate_series(1, len(w)-2)) AS i
-  FROM words WHERE len(w) >= 3
-), grams AS (
-  SELECT DISTINCT doc_id,
-         concat_ws(' ', w[CAST(i AS INT)], w[CAST(i+1 AS INT)], w[CAST(i+2 AS INT)]) AS shingle
-  FROM idx
-), sigs AS (
-  SELECT doc_id,
-    {mins}
-  FROM grams GROUP BY doc_id
-), banded AS (
-  {band_rows}
-), cand AS (
-  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-  FROM banded l JOIN banded r USING (band, bucket)
-  WHERE l.doc_id < r.doc_id
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id
-), common AS (
-  SELECT c.a, c.b, COUNT(*) AS cmn
-  FROM cand c
-  JOIN grams g1 ON g1.doc_id = c.a
-  JOIN grams g2 ON g2.doc_id = c.b AND g2.shingle = g1.shingle
-  GROUP BY c.a, c.b
-)
-SELECT a, b, ROUND(cmn * 1.0 / (sa.sz + sb.sz - cmn), 4) AS jaccard
-FROM common JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-WHERE ROUND(cmn * 1.0 / (sa.sz + sb.sz - cmn), 4) >= {threshold}"""
-
-
-def lsh_ann_sql(
-    dim: int,
-    k: int = 5,
-    num_planes: int = 8,
-    seed: int = 42,
-    table: str = "embeddings",
-) -> str:
-    """Random-hyperplane LSH ANN re-computed in SQL: unit vectors,
-    portable plane matrix regenerated from md5, sign-bit buckets,
-    same-bucket scoring, per-query top-k. Mirrors
-    lsh_ann_topk(hash_fn="md5", multi_probe=0)."""
-    plane = (
-        f"((({hash_sql(str(seed), 'p', 'j')}) % 2001) - 1000) / 1000.0::DOUBLE"
-    )
-    return f"""
-WITH n0 AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}
-), n1 AS (
-  SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x*x))) AS nrm FROM n0
-), u AS (
-  SELECT vec_id, CASE WHEN nrm > 0 THEN list_transform(v, x -> x/nrm) ELSE v END AS e
-  FROM n1
-), planes AS (
-  SELECT p, list_transform(generate_series(0, {dim - 1}), j -> {plane}) AS w
-  FROM generate_series(0, {num_planes - 1}) t(p)
-), bkt AS (
-  SELECT vec_id,
-         CAST(SUM(CASE WHEN d >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS bucket
-  FROM (SELECT u.vec_id, pl.p, list_dot_product(u.e, pl.w) AS d FROM u, planes pl)
-  GROUP BY vec_id
-), scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         ROUND(list_dot_product(qu.e, cu.e), 4) AS sim
-  FROM bkt q
-  JOIN bkt c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-  JOIN u qu ON qu.vec_id = q.vec_id
-  JOIN u cu ON cu.vec_id = c.vec_id
-)
-SELECT query_id, neighbor_id, sim, rank FROM (
-  SELECT query_id, neighbor_id, sim,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
-  FROM scored
-) WHERE rank <= {k}"""
-
-
-def multimodal_sql(rows: int) -> str:
-    """Expected decoded features for ``synthesize_media(codec="real")``:
-    pixel/sample values follow closed-form integer rules, so the mean
-    (feature[0]) and byte size are computed here by integer arithmetic —
-    entirely independent of the PPM/WAV/AVI codecs under test.
-
-    Image rows (media_id % 3 == 0) alternate codec. PPM
-    (media_id % 6 == 3): 13-byte header ('P6\\n16 12\\n255\\n') +
-    16*12*3 raw bytes with pixel i = (31*i + media_id) mod 256.
-    Baseline JPEG (media_id % 6 == 0): 16x16 grayscale of four solid
-    8x8 tiles, tile t = (29*media_id + 17*t) mod 256 — block-constant
-    content survives the all-ones-quant DCT exactly, so the decoded
-    mean is the tile-color average; the payload is padded after EOI to
-    a fixed 1024 bytes, so n_bytes is a constant. WAV payload
-    (% 3 == 1): 44-byte
-    RIFF/fmt/data header + 500 PCM16 samples with sample i =
-    ((37*i + 11*media_id) mod 65536) - 32768. AVI payload (% 3 == 2):
-    RIFF(12) + hdrl LIST(212) + movi LIST(12 + frames*(8 + h*w*3)) with
-    frame f pixel i = (31*i + 7*f + media_id) mod 256 — byte size and
-    layout per the public AVI RIFF form, not the writer under test."""
-    from motive_rdf_spark.operators.multimodal import (
-        AVI_FRAMES,
-        AVI_H,
-        AVI_W,
-        JPEG_PAD_BYTES,
-        PPM_H,
-        PPM_W,
-        WAV_SAMPLES,
-    )
-
-    n_px = PPM_W * PPM_H * 3
-    ppm_bytes = len(f"P6\n{PPM_W} {PPM_H}\n255\n") + n_px
-    jpeg_bytes = JPEG_PAD_BYTES
-    wav_bytes = 44 + 2 * WAV_SAMPLES
-    # RIFF hdr 12; LIST hdrl = 12 + avih(8+56) + LIST strl(12 + strh(8+56)
-    # + strf(8+40) = 124) = 200; LIST movi = 12 + frames*(8 + padded raster)
-    v_px = AVI_W * AVI_H * 3  # 16*3 = 48 bytes/row: already 4-aligned
-    v_total = v_px * AVI_FRAMES
-    avi_bytes = 12 + 200 + 12 + AVI_FRAMES * (8 + v_px)
-    return f"""
-WITH m AS (SELECT k AS media_id FROM generate_series(0, {rows - 1}) t(k)),
-img AS (
-  SELECT media_id, 'image' AS modality, {ppm_bytes} AS n_bytes,
-         (list_sum(list_transform(generate_series(0, {n_px - 1}),
-                                  i -> CAST((i * 31 + media_id) % 256 AS DOUBLE)))
-          / {n_px}) / 255.0::DOUBLE AS f0
-  FROM m WHERE media_id % 6 = 3
-), jpg AS (
-  SELECT media_id, 'image' AS modality, {jpeg_bytes} AS n_bytes,
-         (list_sum(list_transform(generate_series(0, 3),
-                                  t -> CAST((media_id * 29 + t * 17) % 256 AS DOUBLE)))
-          / 4) / 255.0::DOUBLE AS f0
-  FROM m WHERE media_id % 6 = 0
-), aud AS (
-  SELECT media_id, 'audio' AS modality, {wav_bytes} AS n_bytes,
-         (list_sum(list_transform(generate_series(0, {WAV_SAMPLES - 1}),
-                                  i -> CAST(((i * 37 + media_id * 11) % 65536) - 32768 AS DOUBLE)))
-          / {WAV_SAMPLES}) / 32768.0::DOUBLE AS f0
-  FROM m WHERE media_id % 3 = 1
-), vid AS (
-  SELECT media_id, 'video' AS modality, {avi_bytes} AS n_bytes,
-         (list_sum(flatten(list_transform(generate_series(0, {AVI_FRAMES - 1}),
-            f -> list_transform(generate_series(0, {v_px - 1}),
-                                i -> CAST((i * 31 + f * 7 + media_id) % 256 AS DOUBLE)))))
-          / {v_total}) / 255.0::DOUBLE AS f0
-  FROM m WHERE media_id % 3 = 2
-)
-SELECT media_id, modality, CAST(n_bytes AS BIGINT) AS n_bytes, ROUND(f0, 6) AS f0
-FROM (SELECT * FROM img UNION ALL SELECT * FROM jpg
-      UNION ALL SELECT * FROM aud UNION ALL SELECT * FROM vid)"""
-
-
 def planted_graph_cte(n: int, m: int, r: int, k: int, seed: int) -> str:
     """CTE ``g`` reconstructing ``planted_graph(n, m, r, TRIANGLE, k,
     seed, hash_fn="md5")`` — the seeded random base (self-loops
@@ -395,100 +218,3 @@ SELECT metric, CAST(value AS BIGINT) AS value FROM (
   UNION ALL SELECT 'top_is_planted', 1
   UNION ALL SELECT 'top_frequency_ge_k', 1
 )"""
-
-
-def dedup_clusters_sql(
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 42,
-    threshold: float = 0.5,
-    table: str = "documents",
-) -> str:
-    """Near-dup clustering re-computed independently: the full
-    minhash_dedup_sql pair pipeline as a CTE, then a recursive
-    transitive closure (the same shape as pipeline_canonicalize_sql)
-    labels every document with min-reachable-id; docs without a pair
-    are their own cluster."""
-    pairs = minhash_dedup_sql(num_hashes, bands, seed, threshold, table)
-    return f"""WITH RECURSIVE pairs AS ({pairs}
-), sym AS (
-  SELECT a, b FROM pairs UNION SELECT b AS a, a AS b FROM pairs
-), reach AS (
-  SELECT a AS node, a AS comp FROM sym
-  UNION
-  SELECT s.b AS node, r.comp FROM reach r JOIN sym s ON s.a = r.node
-), comp AS (
-  SELECT node, MIN(comp) AS component FROM reach GROUP BY node
-)
-SELECT d.doc_id,
-       COALESCE(c.component, d.doc_id) AS cluster_id,
-       d.doc_id = COALESCE(c.component, d.doc_id) AS is_canonical
-FROM {table} d LEFT JOIN comp c ON c.node = d.doc_id"""
-
-
-def code_corpus_cte(rows: int, seed: int = 42) -> str:
-    """CTE bodies ``p0``/``src`` reconstructing
-    ``code_corpus_table(rows, hash_fn="md5")`` byte-for-byte
-    (``src`` has columns ``k`` = file_id and ``content``). Shared by
-    every oracle whose fixture is the varied code corpus."""
-    mods = ", ".join(f"'{x}'" for x in MODULES)
-    return f"""p0 AS (
-  SELECT k,
-    CAST({_pick(2, len(MODULES), seed)} AS INT) AS mod_i,
-    CAST({_pick(11, 4, seed)} AS INT) AS n_com,
-    CAST({_pick(12, 180, seed)} + 5 AS INT) AS long_len
-  FROM generate_series(0, {rows - 1}) t(k)
-),
-src AS (
-  SELECT k,
-    concat_ws(chr(10),
-      CASE WHEN k % 17 = 0 THEN '# AUTOGENERATED - DO NOT EDIT' END,
-      'import ' || ([{mods}])[mod_i + 1],
-      CASE WHEN n_com > 0
-           THEN rtrim(repeat('# note' || chr(10), n_com), chr(10)) END,
-      'def f' || k || '(x):',
-      '    return x + ' || k,
-      repeat('x', long_len)
-    ) AS content
-  FROM p0
-)"""
-
-
-def code_quality_sql(rows: int, seed: int = 42) -> str:
-    """Reconstruct ``code_corpus_table(rows, hash_fn="md5")`` byte-for-
-    byte and recompute the code-quality metrics + reason bitmask with
-    independent SQL (operators/codequality.py semantics)."""
-    return f"""WITH {code_corpus_cte(rows, seed)},
-m AS (
-  SELECT k AS file_id,
-    len(lines) AS n_lines,
-    list_max(list_transform(lines, l -> length(l))) AS max_line_len,
-    list_aggregate(list_transform(lines, l -> length(l)), 'sum') AS body_chars,
-    len(list_filter(lines, l -> starts_with(ltrim(l), '#')
-                             OR starts_with(ltrim(l), '//'))) AS n_comment,
-    length(regexp_replace(content, '[^A-Za-z0-9]', '', 'g')) AS alnum,
-    length(content) AS n_chars,
-    contains(content, 'DO NOT EDIT') AS is_autogen
-  FROM (SELECT k, content, string_split(content, chr(10)) AS lines FROM src)
-),
-rounded AS (
-  SELECT file_id,
-    CAST(n_lines AS BIGINT) AS n_lines,
-    CAST(max_line_len AS BIGINT) AS max_line_len,
-    ROUND(CAST(body_chars AS DOUBLE) / n_lines, 4) AS avg_line_len,
-    ROUND(CAST(n_comment AS DOUBLE) / n_lines, 4) AS comment_frac,
-    ROUND(CAST(alnum AS DOUBLE) / n_chars, 4) AS alnum_frac,
-    is_autogen
-  FROM m
-),
-scored AS (
-  -- the decision reads the ROUNDED metrics, exactly like the Spark side
-  SELECT *,
-    CAST((CASE WHEN is_autogen THEN 1 ELSE 0 END)
-       + (CASE WHEN max_line_len > 120 THEN 2 ELSE 0 END)
-       + (CASE WHEN comment_frac > 0.35 THEN 4 ELSE 0 END)
-       + (CASE WHEN alnum_frac < 0.25 THEN 8 ELSE 0 END)
-       AS INT) AS reasons
-  FROM rounded
-)
-SELECT *, reasons = 0 AS keep FROM scored ORDER BY file_id"""

@@ -82,20 +82,18 @@ def test_report_sinks():
     assert "4.5" in csv_text  # 100 - 95.5
 
 
-def test_registry_rotation_order():
-    """VERDICT r4 item 1: the driver's correctness file is row-capped,
-    so registry() must rotate evidence — _PRIORITY first, then every
-    other entry ordered by (newest driver-green round, name) with
-    never-checked entries (round 0) ahead of everything."""
-    from motive_rdf_spark.contract import _PRIORITY, _last_driver_green, registry
+def test_registry_registration_order():
+    """registry() is the registration order, holds at most 50 entries,
+    and ``__spark_entry__.queries()`` exposes exactly its entries."""
+    import os
+    import sys
 
-    names = list(registry())
-    assert tuple(names[: len(_PRIORITY)]) == _PRIORITY
-    last = _last_driver_green()
-    rest_keys = [(last.get(n, 0), n) for n in names[len(_PRIORITY) :]]
-    assert rest_keys == sorted(rest_keys)
-    # the rotation is only useful if stale/never-checked entries exist
-    # and genuinely lead the tail — guard against a regression back to
-    # registration order
-    if any(r == 0 for r, _ in rest_keys):
-        assert rest_keys[0][0] == 0
+    from motive_rdf_spark import contract
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__
+
+    reg = contract.registry()
+    assert list(reg) == list(contract._REG)
+    assert len(reg) <= 50
+    assert list(__spark_entry__.queries()) == list(reg)

@@ -5,6 +5,7 @@ CLI construct experiment must drive the same path."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -17,6 +18,20 @@ from motive_rdf_spark.pipeline.materialize import (
     run_pipeline,
     run_snapshot,
 )
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _cli(*args: str, timeout: int) -> subprocess.CompletedProcess:
+    """Run ``python -m motive_rdf_spark`` from this checkout."""
+    return subprocess.run(
+        [sys.executable, "-m", "motive_rdf_spark", *args],
+        capture_output=True,
+        text=True,
+        cwd=ROOT,
+        timeout=timeout,
+        env={**os.environ, "PYTHONPATH": ROOT, "SPARK_GRAFT_CPUS": "4"},
+    )
 
 
 def test_crash_before_ledger_commit_recovers(spark, tmp_path, monkeypatch):
@@ -64,16 +79,9 @@ def test_cli_construct_experiment(spark, tmp_path):
     src_path = str(tmp_path / "source")
     source_code_table(spark, 30, commits=1).drop("k").write.parquet(src_path)
     out = str(tmp_path / "out")
-    res = subprocess.run(
-        [
-            sys.executable, "-m", "motive_rdf_spark",
-            "--experiment", "construct", "--data", src_path, "--output", out,
-        ],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
+    res = _cli(
+        "--experiment", "construct", "--data", src_path, "--output", out,
         timeout=300,
-        env={**__import__("os").environ, "PYTHONPATH": "/root/repo", "SPARK_GRAFT_CPUS": "4"},
     )
     assert res.returncode == 0, res.stderr[-2000:]
     assert "triples" in res.stdout
@@ -81,17 +89,10 @@ def test_cli_construct_experiment(spark, tmp_path):
 
 
 def test_cli_multi_experiment(spark, tmp_path):
-    res = subprocess.run(
-        [
-            sys.executable, "-m", "motive_rdf_spark",
-            "--experiment", "multi", "--data", "hub:60",
-            "--iterations", "5", "--seed", "4",
-        ],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
+    res = _cli(
+        "--experiment", "multi", "--data", "hub:60",
+        "--iterations", "5", "--seed", "4",
         timeout=300,
-        env={**__import__("os").environ, "PYTHONPATH": "/root/repo", "SPARK_GRAFT_CPUS": "4"},
     )
     assert res.returncode == 0, res.stderr[-2000:]
     assert "best motif set" in res.stdout
@@ -102,19 +103,12 @@ def test_cli_synthetic_experiment(spark, tmp_path):
     instance count, the focus column's frequency for the planted motif
     row is >= its injection count, and score grows with instances."""
     out = str(tmp_path)
-    res = subprocess.run(
-        [
-            sys.executable, "-m", "motive_rdf_spark",
-            "--experiment", "synthetic", "--nodes", "300", "--links", "900",
-            "--relations", "5", "--instances", "0", "60",
-            "--iterations", "3", "--seed", "7", "--topk", "5",
-            "--max-time", "5", "--output", out,
-        ],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
+    res = _cli(
+        "--experiment", "synthetic", "--nodes", "300", "--links", "900",
+        "--relations", "5", "--instances", "0", "60",
+        "--iterations", "3", "--seed", "7", "--topk", "5",
+        "--max-time", "5", "--output", out,
         timeout=600,
-        env={**__import__("os").environ, "PYTHONPATH": "/root/repo", "SPARK_GRAFT_CPUS": "4"},
     )
     assert res.returncode == 0, res.stderr[-2000:]
     import csv
@@ -134,19 +128,12 @@ def test_cli_synthetic_experiment(spark, tmp_path):
 
 def test_cli_classification_experiment(spark, tmp_path):
     out = str(tmp_path / "cls")
-    res = subprocess.run(
-        [
-            sys.executable, "-m", "motive_rdf_spark",
-            "--experiment", "classification", "--data", "planted:300,900,5,60",
-            "--warm=-1,0,-2;-1,1,-3;-2,2,-3",
-            "--iterations", "4", "--seed", "3", "--topk", "2",
-            "--max-time", "5", "--output", out,
-        ],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
+    res = _cli(
+        "--experiment", "classification", "--data", "planted:300,900,5,60",
+        "--warm=-1,0,-2;-1,1,-3;-2,2,-3",
+        "--iterations", "4", "--seed", "3", "--topk", "2",
+        "--max-time", "5", "--output", out,
         timeout=600,
-        env={**__import__("os").environ, "PYTHONPATH": "/root/repo", "SPARK_GRAFT_CPUS": "4"},
     )
     assert res.returncode == 0, res.stderr[-2000:]
     complete = spark.read.csv(f"{out}/complete", schema="s long, p long, o long")

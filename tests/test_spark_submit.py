@@ -13,6 +13,7 @@ import pytest
 
 from motive_rdf_spark.data.generators import candidate_dict, source_code_table
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit") or os.path.join(
     os.path.dirname(os.path.dirname(sys.executable)), "bin", "spark-submit"
 )
@@ -20,7 +21,7 @@ SPARK_SUBMIT = shutil.which("spark-submit") or os.path.join(
 
 @pytest.mark.skipif(not shutil.which("spark-submit"), reason="spark-submit not on PATH")
 def test_construct_job_via_spark_submit(spark, tmp_path):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from tools.make_pyfiles import build
 
     zip_path = build(str(tmp_path / "motive_rdf_spark.zip"))
@@ -40,7 +41,7 @@ def test_construct_job_via_spark_submit(spark, tmp_path):
             "--conf", "spark.ui.enabled=false",
             "--conf", "spark.sql.shuffle.partitions=8",
             "--py-files", zip_path,
-            "/root/repo/jobs/construct_job.py",
+            os.path.join(ROOT, "jobs", "construct_job.py"),
             src_path, out, cand_path,
         ],
         capture_output=True,

@@ -4,55 +4,7 @@ makes Trigger.AvailableNow deployments safe)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-from motive_rdf_spark.streaming.incremental import (
-    run_available_now,
-    stream_events,
-    streaming_sessionize,
-    windowed_event_counts,
-)
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_windowed_counts_stream_equals_batch(spark, tmp_path):
-    stream = stream_events(spark, SF)
-    assert stream.isStreaming
-    agg = windowed_event_counts(stream)
-    run_available_now(agg, str(tmp_path / "ckpt"), "win_counts")
-    got = sorted(map(tuple, spark.sql("SELECT * FROM win_counts").collect()))
-
-    batch = spark.read.parquet(f"{SF}/events.parquet")
-    exp = sorted(map(tuple, windowed_event_counts(batch).collect()))
-    assert got == exp
-
-
-def test_stateful_sessionize_matches_batch_window(spark, tmp_path):
-    stream = stream_events(spark, SF)
-    sess = streaming_sessionize(stream)
-    q = (
-        sess.writeStream.format("memory")
-        .queryName("sessions_stream")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # last emitted row per user is the final running total
-    got_df = spark.sql(
-        "SELECT user_id, max(sessions) AS sessions FROM sessions_stream GROUP BY user_id"
-    )
-    got = {r["user_id"]: r["sessions"] for r in got_df.collect()}
-
-    # batch oracle: the contract's lag-window sessionization
-    from motive_rdf_spark.contract import registry
-
-    fn, _ = registry()["sessionize"]
-    exp = {r["user_id"]: r["sessions"] for r in fn(spark, SF).collect()}
-    assert got == exp
 
 
 def test_streaming_extraction_incremental_equals_batch(spark, tmp_path):
@@ -99,66 +51,6 @@ def test_streaming_extraction_incremental_equals_batch(spark, tmp_path):
     run_extract_stream(spark, src_dir, out_dir)
     assert load_string_triples(spark, out_dir).count() == n_before
     full.unpersist()
-
-
-def test_streaming_dedup_state_spans_microbatches(spark, tmp_path):
-    """A duplicate arriving in a LATER micro-batch must be dropped by
-    the dedup state, not just within-batch distinct: drop file 1,
-    drain, drop file 2 (one dup + one new), drain again — the second
-    run must emit only the genuinely new content."""
-    from motive_rdf_spark.streaming.incremental import DOC_SCHEMA, streaming_dedup
-
-    src_dir = tmp_path / "drop"
-    src_dir.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def write_batch(fname, rows):
-        spark.createDataFrame(rows, DOC_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / fname))
-        import glob
-        import shutil
-
-        part = glob.glob(str(tmp_path / fname / "part-*.parquet"))[0]
-        shutil.copy(part, str(src_dir / f"{fname}.parquet"))
-
-    out_dir = str(tmp_path / "out")
-
-    def drain():
-        # file sink (not memory): only file sinks support resuming from
-        # the checkpoint, which is exactly what this test exercises
-        stream = spark.readStream.schema(DOC_SCHEMA).parquet(str(src_dir))
-        q = (
-            streaming_dedup(stream)
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return {r["content_sha"] for r in spark.read.parquet(out_dir).collect()}
-
-    write_batch("b1", [(1, "alpha text", "en", "s", 10), (2, "beta text", "en", "s", 9)])
-    first = drain()
-    assert len(first) == 2
-
-    # second drop: doc 3 duplicates doc 1's content; doc 4 is new
-    write_batch("b2", [(3, "alpha text", "en", "s", 10), (4, "gamma text", "en", "s", 10)])
-    both = drain()
-    # the duplicate was dropped by state carried across the restart:
-    # exactly one new content appears
-    assert len(both) == 3 and first < both
-
-    # and the total equals the batch-distinct set over all four docs
-    batch = spark.createDataFrame(
-        [(1, "alpha text", "en", "s", 10), (2, "beta text", "en", "s", 9),
-         (3, "alpha text", "en", "s", 10), (4, "gamma text", "en", "s", 10)],
-        DOC_SCHEMA,
-    )
-    exp = {r["content_sha"] for r in streaming_dedup(batch).collect()}
-    assert both == exp
 
 
 def test_streaming_motif_supports_incremental_equals_batch(spark, tmp_path):

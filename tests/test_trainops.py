@@ -1,6 +1,6 @@
 """Training-data operator tests: dedup (n-gram Jaccard, MinHash-LSH,
-SimHash), similarity search (brute-force + LSH ANN), multimodal
-plumbing. Exactness is pinned against hand-computed values, the DuckDB
+SimHash), similarity search (brute-force + LSH ANN), sampling and
+graph ranking. Exactness is pinned against hand-computed values, the DuckDB
 oracle, or the brute-force baseline."""
 
 from __future__ import annotations
@@ -15,12 +15,6 @@ from motive_rdf_spark.operators.dedup import (
     simhash,
     simhash_sql,
     word_ngrams,
-)
-from motive_rdf_spark.operators.multimodal import (
-    FEATURE_DIM,
-    extract_features,
-    frame_sample_plan,
-    synthesize_media,
 )
 from motive_rdf_spark.operators.similarity import cosine_topk, lsh_ann_topk
 
@@ -138,38 +132,6 @@ def test_lsh_multi_probe_improves_recall(spark):
     assert r1 >= r0
 
 
-def test_multimodal_feature_plumbing(spark):
-    media = synthesize_media(spark, 30)
-    feats = extract_features(media, decode="fake").collect()
-    assert len(feats) == 30
-    for r in feats:
-        assert len(r["feature"]) == FEATURE_DIM
-        assert r["n_bytes"] == 64  # sha2 hex cast to binary = 64 bytes
-    # deterministic across runs
-    again = {r["media_id"]: tuple(r["feature"]) for r in extract_features(media, decode="fake").collect()}
-    assert again == {r["media_id"]: tuple(r["feature"]) for r in feats}
-
-
-def test_multimodal_strict_is_marked_stub(spark):
-    media = synthesize_media(spark, 3)
-    with pytest.raises(Exception, match="NotImplementedError|real media codecs"):
-        extract_features(media, decode="strict").collect()
-
-
-def test_frame_sample_plan_grid(spark):
-    media = synthesize_media(spark, 50)
-    plan = frame_sample_plan(media, every_ms=1000)
-    joined = (
-        plan.groupBy("media_id")
-        .agg(F.count("*").alias("frames"))
-        .join(media.select("media_id", F.col("meta.duration_ms").alias("d")), "media_id")
-        .collect()
-    )
-    assert joined  # some media are videos
-    for r in joined:
-        assert r["frames"] == max(r["d"] - 1, 0) // 1000 + 1
-
-
 def test_ivf_ann_finds_planted_clone_and_recall(spark):
     """IVF ANN: a planted exact clone lands in the same centroid cell
     (identical vector -> identical assignment) and must be top-1; with
@@ -220,147 +182,6 @@ def test_cosine_near_dup_lsh_subset_and_clone_recall(spark):
     for r in emb.select("vec_id").collect():
         assert (r["vec_id"], r["vec_id"] + 10000) in approx
     corpus.unpersist()
-
-
-def test_ppm_wav_codecs_roundtrip():
-    """The real codecs decode well-formed payloads exactly (pure-Python
-    parse, no media libs) and reject malformed ones."""
-    import numpy as np
-
-    from motive_rdf_spark.operators.multimodal import (
-        PPM_H,
-        PPM_W,
-        WAV_RATE,
-        WAV_SAMPLES,
-        _make_ppm,
-        _make_wav,
-        decode_ppm,
-        decode_wav,
-    )
-
-    px = decode_ppm(_make_ppm(4))
-    assert px.shape == (PPM_H, PPM_W, 3)
-    n = PPM_W * PPM_H * 3
-    expect = ((np.arange(n) * 31 + 4) % 256).reshape(PPM_H, PPM_W, 3)
-    assert (px == expect).all()
-    # comments in the header are skipped per the netpbm spec
-    with_comment = b"P6\n# a comment\n2 1\n255\n" + bytes(range(6))
-    assert decode_ppm(with_comment).shape == (1, 2, 3)
-
-    s, rate = decode_wav(_make_wav(7))
-    assert rate == WAV_RATE and len(s) == WAV_SAMPLES
-    exp = ((np.arange(WAV_SAMPLES) * 37 + 7 * 11) % 65536) - 32768
-    assert (s.astype(np.int64) == exp).all()
-
-    with pytest.raises(ValueError):
-        decode_ppm(b"P5\n2 1\n255\n" + bytes(6))
-    with pytest.raises(ValueError):
-        decode_wav(b"RIFFxxxxNOPE")
-
-
-def test_multimodal_real_features_match_closed_form(spark):
-    """decode="real" over synthesized PPM/WAV payloads reproduces the
-    closed-form means the independent oracle computes (contract
-    multimodal_features)."""
-    from motive_rdf_spark.operators.multimodal import (
-        AVI_FRAMES,
-        AVI_H,
-        AVI_W,
-        PPM_H,
-        PPM_W,
-        WAV_SAMPLES,
-    )
-
-    media = synthesize_media(spark, 9, codec="real")
-    rows = {r["media_id"]: r for r in extract_features(media, decode="real").collect()}
-    assert len(rows) == 9
-    n = PPM_W * PPM_H * 3
-    nv = AVI_W * AVI_H * 3
-    for mid, r in rows.items():
-        if mid % 3 == 0:
-            assert r["modality"] == "image"
-            if mid % 6 == 0:  # compressed tier: baseline JPEG tiles
-                exp = sum((29 * mid + 17 * t) % 256 for t in range(4)) / 4 / 255.0
-            else:
-                exp = sum((i * 31 + mid) % 256 for i in range(n)) / n / 255.0
-        elif mid % 3 == 1:
-            assert r["modality"] == "audio"
-            exp = (
-                sum(((i * 37 + mid * 11) % 65536) - 32768 for i in range(WAV_SAMPLES))
-                / WAV_SAMPLES
-                / 32768.0
-            )
-        else:
-            assert r["modality"] == "video"
-            exp = (
-                sum((i * 31 + f * 7 + mid) % 256 for f in range(AVI_FRAMES) for i in range(nv))
-                / (nv * AVI_FRAMES)
-                / 255.0
-            )
-            assert r["feature"][2:6] == [AVI_W, AVI_H, AVI_FRAMES, 10.0]
-        assert abs(r["feature"][0] - exp) < 1e-12, (mid, r["feature"][0], exp)
-
-
-def test_multimodal_strict_mode_still_raises(spark):
-    """decode="strict" stays the explicit plug-a-library slot."""
-    media = synthesize_media(spark, 9).filter(F.col("modality") == "video")
-    assert media.count() > 0
-    with pytest.raises(Exception, match="NotImplementedError|no codec"):
-        extract_features(media, decode="strict").collect()
-
-
-def test_sample_frames_matches_plan_grid_and_closed_form(spark):
-    """sample_frames emits exactly frame_sample_plan's (media_id, ts)
-    grid, and each sampled frame's mean matches the closed-form pixel
-    rule for the frame at ts*fps/1000."""
-    from motive_rdf_spark.operators.multimodal import (
-        AVI_FPS,
-        AVI_FRAMES,
-        AVI_H,
-        AVI_W,
-        sample_frames,
-    )
-
-    media = synthesize_media(spark, 12, codec="real").persist()
-    got = {
-        (r["media_id"], r["frame_ts_ms"]): r["frame_mean"]
-        for r in sample_frames(media, every_ms=100).collect()
-    }
-    grid = {
-        (r["media_id"], r["frame_ts_ms"])
-        for r in frame_sample_plan(media, every_ms=100).collect()
-    }
-    media.unpersist()
-    assert set(got) == grid and grid  # identical grids, non-empty
-    nv = AVI_W * AVI_H * 3
-    for (mid, ts), mean in got.items():
-        f = min(ts * AVI_FPS // 1000, AVI_FRAMES - 1)
-        exp = sum((i * 31 + f * 7 + mid) % 256 for i in range(nv)) / nv / 255.0
-        assert abs(mean - exp) < 1e-12, (mid, ts, mean, exp)
-
-
-def test_repetition_scores_edge_cases(spark):
-    """top_token_fraction / dup_bigram_fraction on degenerate docs:
-    single token (no bigrams -> 0), all-same token (frac 1.0 /
-    fully duplicate bigrams), and a doc with one repeated bigram."""
-    from motive_rdf_spark.contract import dup_bigram_fraction, top_token_fraction
-
-    docs = spark.createDataFrame(
-        [
-            (0, "solo"),
-            (1, "a a a a"),
-            (2, "x y x y z"),
-        ],
-        "doc_id long, text string",
-    )
-    top = {r["doc_id"]: r["top_tok_frac"] for r in top_token_fraction(docs).collect()}
-    assert top[0] == 1.0
-    assert top[1] == 1.0
-    assert top[2] == 0.4  # 'x' and 'y' twice in 5 tokens
-    dup = {r["doc_id"]: r["dup_bigram_frac"] for r in dup_bigram_fraction(docs).collect()}
-    assert dup[0] == 0.0  # no bigrams
-    assert dup[1] == round(1 - 1 / 3, 4)  # ['a a','a a','a a']
-    assert dup[2] == 0.25  # ['x y','y x','x y','y z'] -> 3 distinct of 4
 
 
 def test_decontaminate_planted_overlap(spark):
@@ -466,29 +287,6 @@ def test_stratified_shortfall_fallback_still_exact(spark):
     df.unpersist()
 
 
-def test_redact_pii_email_pattern(spark):
-    """Email redaction: exact replacement strings and counts, including
-    multi-match rows and no-match rows."""
-    from motive_rdf_spark.contract import redact_pii
-
-    df = spark.createDataFrame(
-        [
-            (0, "contact bob@example.com or eve@test.org today"),
-            (1, "no addresses here"),
-            (2, "x@y.io"),
-        ],
-        "id long, body string",
-    )
-    pat = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-    rows = {
-        r["id"]: (r["body_redacted"], r["n_redactions"])
-        for r in redact_pii(df, "body", pattern=pat, replacement="<EMAIL>").collect()
-    }
-    assert rows[0] == ("contact <EMAIL> or <EMAIL> today", 2)
-    assert rows[1] == ("no addresses here", 0)
-    assert rows[2] == ("<EMAIL>", 1)
-
-
 def test_pack_sequences_boundaries(spark):
     """Pack assignment: a doc belongs to the pack its preceding
     cumulative count falls in; packs overflow by at most one doc;
@@ -513,38 +311,6 @@ def test_pack_sequences_boundaries(spark):
     assert got == {0: (0, 6), 1: (0, 6), 2: (1, 3), 3: (1, 20), 4: (0, 4)}
 
 
-def test_pack_sequences_oracle_agrees_on_multiwhitespace(spark, tmp_path):
-    """VERDICT r3 item 4: the contract oracle must tokenize runs of
-    spaces/tabs exactly like the Spark side (regex split), checked on a
-    fixture that actually contains them."""
-    import duckdb
-
-    from motive_rdf_spark.contract import registry
-
-    docs = spark.createDataFrame(
-        [
-            (0, "a", "one  two\tthree"),
-            (1, "a", "alpha beta  gamma delta epsilon"),
-            (2, "a", " lead and trail "),
-            (3, "b", "x \t y"),
-            (4, "b", "single"),
-        ],
-        "doc_id long, source string, text string",
-    )
-    sf_dir = str(tmp_path)
-    docs.write.parquet(f"{sf_dir}/documents.parquet")
-
-    fn, sql = registry()["pack_sequences"]
-    spark_rows = sorted(map(tuple, fn(spark, sf_dir).collect()))
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet/*.parquet'"
-    )
-    duck_rows = sorted(map(tuple, con.execute(sql).fetchall()))
-    assert spark_rows == duck_rows
-
-
 def test_dedup_clusters_canonical_per_component(spark):
     """Chain a-b-c and pair e-f must fold to min-id clusters; isolated
     d stays its own canonical singleton. Transitivity comes from the
@@ -564,108 +330,6 @@ def test_dedup_clusters_canonical_per_component(spark):
         1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5
     }
     assert [k for k, v in sorted(out.items()) if v["is_canonical"]] == [1, 4, 5]
-
-
-def test_token_count_bpe_pretokenizer_cases(spark):
-    """The portable BPE-ish pre-tokenizer must agree with its declared
-    piece rules — contractions split, digit runs cap at 3, punctuation
-    is one piece per mark, whitespace never counts — and match the
-    DuckDB oracle regex on the same strings (Java regex vs RE2)."""
-    import duckdb
-
-    from motive_rdf_spark.contract import BPE_TOKEN_RX
-
-    from pyspark.sql import functions as F
-
-    cases = [
-        (1, "don't stop"),          # don / 't / stop
-        (2, "12345"),               # 123 / 45
-        (3, "e.g. x"),              # e / . / g / . / x
-        (4, "hello   world"),       # runs of spaces separate, not count
-        (5, ""),                    # empty -> 0
-        (6, "it's we'll they've"),  # 2 + 2 + 2
-        (7, "a\tb\nc"),             # tabs/newlines separate
-    ]
-    expect = {1: 3, 2: 2, 3: 5, 4: 2, 5: 0, 6: 6, 7: 3}
-    df = spark.createDataFrame(cases, "doc_id long, text string").select(
-        "doc_id",
-        F.size(F.regexp_extract_all("text", F.lit(BPE_TOKEN_RX), 0)).alias("n"),
-    )
-    got = {r["doc_id"]: r["n"] for r in df.collect()}
-    assert got == expect, got
-    # RE2 (DuckDB) agreement on the identical pattern
-    con = duckdb.connect()
-    for doc_id, text in cases:
-        (n,) = con.execute(
-            "SELECT len(regexp_extract_all(?, ?))", [text, BPE_TOKEN_RX]
-        ).fetchone()
-        assert n == expect[doc_id], (doc_id, text, n)
-
-
-# ---------------------------------------------------------------------------
-# corpus LM scoring / boilerplate / domain mixing (operators/lm.py, sampling)
-# ---------------------------------------------------------------------------
-
-
-def test_bigram_lm_rare_text_scores_higher(spark):
-    """A document made of corpus-common bigrams must cost fewer bits
-    per bigram than one made of bigrams seen nowhere else."""
-    from motive_rdf_spark.operators.lm import bigram_lm_scores
-
-    common = "the cat sat on the mat"
-    docs = spark.createDataFrame(
-        [(i, common) for i in range(10)] + [(99, "zyx wvu tsr qpo nml kji")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r["lm_bits_per_bigram"] for r in bigram_lm_scores(docs).collect()}
-    assert len(got) == 11
-    assert got[99] > got[0] + 1.0  # rare text clearly more surprising
-
-
-def test_bigram_lm_matches_duckdb_oracle(spark):
-    """Value-exact vs the generated SQL twin on real testdata."""
-    from motive_rdf_spark.operators.lm import bigram_lm_scores, bigram_lm_sql
-
-    docs = _docs(spark)
-    got = sorted(
-        (r["doc_id"], r["lm_bits_per_bigram"])
-        for r in bigram_lm_scores(docs).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM read_parquet('%s/documents.parquet')"
-        % SF_SMALL
-    )
-    want = sorted(map(tuple, con.execute(bigram_lm_sql()).fetchall()))
-    assert len(got) == len(want)
-    for (gid, gv), (wid, wv) in zip(got, want):
-        assert gid == wid
-        assert abs(gv - wv) < 1e-9
-
-
-def test_boilerplate_fraction_planted_banner(spark):
-    """Docs sharing a planted banner 3-gram score the banner fraction;
-    a unique doc scores 0."""
-    from motive_rdf_spark.operators.lm import boilerplate_fraction
-
-    banner = "all rights reserved"
-    docs = spark.createDataFrame(
-        [
-            (1, f"{banner} alpha beta gamma"),
-            (2, f"{banner} delta epsilon zeta"),
-            (3, f"{banner} eta theta iota"),
-            (4, "kappa lambda mu nu xi"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: r["boiler_frac"]
-        for r in boilerplate_fraction(docs, n=3, min_df=3).collect()
-    }
-    # each banner doc has 4 distinct 3-grams, exactly 1 of which (the
-    # banner itself) appears in >= 3 docs
-    assert got[1] == got[2] == got[3] == 0.25
-    assert got[4] == 0.0
 
 
 def test_mix_sources_rates_nested_and_allowlist(spark):

@@ -22,43 +22,9 @@ AUDITED = [
     "bgp_chain",
     "triple_lookup",
     "degrees_in",
-    "q1_pricing_summary",
-    "top_customers",
-    "revenue_rollup",
-    "sessionize",
-    "ngram_jaccard",
-    "minhash_dedup",
-    "simhash_fingerprint",
-    "lsh_ann",
     "dict_encode",
-    "running_user_value",
-    "top_token_fraction",
-    "dup_bigram_fraction",
-    "dedup_clusters",
-    "stratified_sample",
-    "lm_bigram_score",
-    "boilerplate_ngrams",
-    "mix_sources",
-    "khop_reachability",
-    "pagerank_entities",
-    "max_dup_span",
-    "line_dedup",
-    "line_repetition",
-    "winnow_profile",
-    "bm25_retrieval",
-    "centroid_cosine",
-    "code_quality",
-    "asof_join_events",
-    "range_join_events",
-    "interval_overlap_orders",
-    "multimodal_features",
-    "column_profile",
-    "word_entropy",
-    "normalize_text",
-    "triangle_stats",
     "delta_bgp_support",
     "incremental_canonicalize",
-    "semantic_decontaminate",
 ]
 
 
@@ -172,20 +138,6 @@ def main(names: list[str]) -> None:
         "  fewer_exchanges).",
         "- `pushdown: —` is expected for queries whose first operator is a",
         "  full aggregation (no filter to push).",
-        "- khop_reachability's and pagerank_entities' all-zero rows are",
-        "  correct, not missing data: both iterative operators materialize",
-        "  each level/iteration with an eager localCheckpoint (the frontier/",
-        "  rank vector feeds multiple consumers; lazy composition would",
-        "  re-run iteration t once per later iteration — measured 33",
-        "  exchanges for k=3 lazy khop vs ~3 per level materialized), so",
-        "  the audited final plan is a selection over checkpointed leaves",
-        "  and the per-iteration join + combine-enabled sum ran in their",
-        "  own jobs.",
-        "- dedup_clusters's single SMJ is deliberate: the docs ⨝ components",
-        "  join's build side (every doc appearing in a near-dup pair) is NOT",
-        "  provably bounded, so the spill-safe sort-merge strategy is left to",
-        "  AQE rather than hinting a shuffle-hash build that could OOM on a",
-        "  boilerplate-heavy corpus; AQE still broadcasts it when small.",
         "- row-python must be `none` everywhere (input_hint: vectorized",
         "  Arrow UDFs only).",
     ]

@@ -42,7 +42,7 @@ def bench_once(spark, src, rows, precount: bool) -> float:
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     rows = int(sys.argv[1]) if len(sys.argv) > 1 else 300_000
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 

@@ -13,7 +13,7 @@ import time
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     rows = int(sys.argv[1]) if len(sys.argv) > 1 else 300_000
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
