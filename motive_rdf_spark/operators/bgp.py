@@ -283,11 +283,25 @@ def _order_edges(
     return order
 
 
+def _distinct_edges(emb: DataFrame, pattern: Pattern) -> DataFrame:
+    """Per-edge triple distinctness (Find.java:286-316): no two pattern
+    edges bind the same triple. Only edge pairs that can collide on a
+    triple need the filter: equal constant predicates or any variable
+    predicate. ``emb`` carries one ``__tid_<i>`` column per edge."""
+    edges = pattern.edges
+    for i in range(len(edges)):
+        for j in range(i + 1, len(edges)):
+            pi, pj = edges[i][1], edges[j][1]
+            if pi >= 0 and pj >= 0 and pi != pj:
+                continue
+            emb = emb.filter(F.col(f"{TID}_{i}") != F.col(f"{TID}_{j}"))
+    return emb
+
+
 def find(
     triples: DataFrame | GraphStore,
     pattern: Pattern,
     probe: bool = False,
-    distinct_edges: bool = True,
 ) -> DataFrame:
     """All matches of ``pattern`` in ``triples`` — the Spark equivalent of
     ``Find.find(pattern, graph)`` (Find.java:40-72).
@@ -340,16 +354,7 @@ def find(
                     injected.add(key)
 
     assert emb is not None
-    if distinct_edges and len(pattern.edges) > 1:
-        tids = [f"{TID}_{i}" for i in range(len(pattern.edges))]
-        for i in range(len(tids)):
-            for j in range(i + 1, len(tids)):
-                # only edge pairs that can collide on a triple need the
-                # filter: same constant predicates or any variable pred
-                pi, pj = pattern.edges[i][1], pattern.edges[j][1]
-                if pi >= 0 and pj >= 0 and pi != pj:
-                    continue
-                emb = emb.filter(F.col(tids[i]) != F.col(tids[j]))
+    emb = _distinct_edges(emb, pattern)
 
     out_cols = [var_col(v) for v in pattern.variables]
     if not out_cols:  # fully grounded pattern
@@ -414,7 +419,6 @@ def find_budgeted(
     timeout_s: float,
     max_matches: int = 200_000,
     probe: bool = False,
-    distinct_edges: bool = True,
     soft_frac: float = 0.25,
     cap_multiple: int = 10,
 ) -> BudgetedMatches:
@@ -496,14 +500,7 @@ def find_budgeted(
             # else: no pressure — stay lazy, identical plan to find()
 
     assert emb is not None
-    if distinct_edges and len(pattern.edges) > 1:
-        tids = [f"{TID}_{i}" for i in range(len(pattern.edges))]
-        for i in range(len(tids)):
-            for j in range(i + 1, len(tids)):
-                pi, pj = pattern.edges[i][1], pattern.edges[j][1]
-                if pi >= 0 and pj >= 0 and pi != pj:
-                    continue
-                emb = emb.filter(F.col(tids[i]) != F.col(tids[j]))
+    emb = _distinct_edges(emb, pattern)
 
     out_cols = [var_col(v) for v in pattern.variables]
     if not out_cols:

@@ -37,7 +37,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from motive_rdf_spark.operators.bgp import GraphStore, TID, _edge_scan, prepare_triples
+from motive_rdf_spark.operators.bgp import (
+    GraphStore,
+    TID,
+    _distinct_edges,
+    _edge_scan,
+    prepare_triples,
+)
 from motive_rdf_spark.patterns import Pattern, var_col
 
 
@@ -81,8 +87,6 @@ def find_delta(
     delta: DataFrame,
     pattern: Pattern,
     assume_new: bool = False,
-    distinct_edges: bool = True,
-    adaptive: bool = True,
 ) -> DataFrame:
     """All matches of ``pattern`` in ``old ∪ delta`` that use at least
     one ``delta`` triple — disjoint from ``find(old, pattern)``, and
@@ -98,11 +102,11 @@ def find_delta(
     already present in ``old`` (pass it when the caller guarantees
     disjointness, e.g. a ledgered snapshot append).
 
-    ``adaptive=True`` (default) materializes each run's INTERMEDIATE
-    embedding (``localCheckpoint`` + count) while it is provably
-    broadcast-small, so every expansion join broadcasts the embedding
-    and streams the big graph scan exchange-free; set False to keep
-    the whole result fully lazy (identical rows either way).
+    Each run materializes its INTERMEDIATE embedding
+    (``localCheckpoint`` + count) after every expansion whose input
+    embedding was broadcast-small, so the next join can broadcast it
+    too and stream the big graph scan exchange-free. The k runs are
+    built on driver threads so these per-run jobs overlap.
 
     The (small) prepared delta is persisted and counted up front: the
     count funds the per-run EMPTY-Δ SHORT-CIRCUIT — run *i* is skipped
@@ -161,7 +165,7 @@ def find_delta(
         emb: DataFrame | None = None
         # known row count of the current embedding (None = unknown/big).
         # Seeded with |Δ| for the leading scan (constants only shrink
-        # it); refreshed by the adaptive checkpoints below.
+        # it); refreshed by the step checkpoints below.
         emb_count: int | None = None
         present: set[str] = set()
         injected: set[frozenset[str]] = set()
@@ -212,18 +216,11 @@ def find_delta(
             # embedding (it is the run's output and may be huge); once
             # a count comes back big, later joins fall back to the
             # lazy shuffled plan.
-            if adaptive and small and pos > 0 and pos < len(order) - 1:
+            if small and pos > 0 and pos < len(order) - 1:
                 emb = emb.localCheckpoint(eager=True)
                 emb_count = emb.count()
         assert emb is not None
-        if distinct_edges and k > 1:
-            tids = [f"{TID}_{n}" for n in range(k)]
-            for a_i in range(k):
-                for b_i in range(a_i + 1, k):
-                    pi, pj = pattern.edges[a_i][1], pattern.edges[b_i][1]
-                    if pi >= 0 and pj >= 0 and pi != pj:
-                        continue
-                    emb = emb.filter(F.col(tids[a_i]) != F.col(tids[b_i]))
+        emb = _distinct_edges(emb, pattern)
         out_cols = [var_col(v) for v in pattern.variables]
         return (
             emb.limit(1).select(F.lit(True).alias("matched"))
@@ -231,7 +228,7 @@ def find_delta(
             else emb.select(*out_cols)
         )
 
-    # build the k runs on driver THREADS: each run's adaptive
+    # build the k runs on driver THREADS: each run's step
     # checkpoint+count jobs are independent, so submitting them
     # concurrently overlaps their cluster work (the per-run jobs were
     # the delta path's serialized overhead) — the same pattern
@@ -239,7 +236,7 @@ def find_delta(
     # submission is thread-safe; result order stays by run index.
     from concurrent.futures import ThreadPoolExecutor
 
-    if adaptive and k > 1:
+    if k > 1:
         with ThreadPoolExecutor(max_workers=min(k, 4)) as pool:
             built = list(pool.map(_build_run, range(k)))
     else:

@@ -1,6 +1,7 @@
-"""Differential property test for the matcher: ``find`` vs an
-independent in-Python brute-force enumerator on random small graphs and
-random patterns.
+"""Differential property test for the matcher: ``find``, the per-step
+checkpointed ``find_budgeted`` and ``find(old) ⊎ find_delta(old, Δ)``
+vs an independent in-Python brute-force enumerator on random small
+graphs and random patterns.
 
 The brute force reimplements the reference's match semantics from the
 spec (Find.java:40-500 / SURVEY.md §1.2) with none of the engine's
@@ -17,7 +18,8 @@ import random
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-from motive_rdf_spark.operators.bgp import find, prepare_triples
+from motive_rdf_spark.operators.bgp import find, find_budgeted, prepare_triples
+from motive_rdf_spark.operators.delta import find_delta
 from motive_rdf_spark.patterns import renumber
 
 
@@ -101,11 +103,33 @@ def test_find_matches_bruteforce(spark, pat, seed):
         spark.createDataFrame(triples, "s long, p long, o long")
     )
     expected = _brute_find(triples, pat)
-    if not pat.variables:  # fully grounded: find returns a `matched` row
-        assert (find(df, pat).count() == 1) == bool(expected)
-        return
-    got = sorted(tuple(r) for r in find(df, pat).collect())
-    assert got == expected
+    # soft_frac=0 materializes every round under the deadline watchdog:
+    # the per-step checkpoint path, not find()'s single lazy plan
+    budgeted = find_budgeted(
+        df, pat, timeout_s=1e9, max_matches=10**6, soft_frac=0.0
+    )
+    assert not budgeted.timed_out
+    # find(old) ⊎ find_delta(old, Δ) = find(old ∪ Δ), split at a
+    # seed-chosen index (either side may be empty)
+    cut = rng.randrange(len(triples) + 1)
+    old = prepare_triples(
+        spark.createDataFrame(triples[:cut], "s long, p long, o long")
+    )
+    new = find_delta(
+        old, spark.createDataFrame(triples[cut:], "s long, p long, o long"), pat
+    )
+    try:
+        if not pat.variables:  # fully grounded: a `matched` row per hit
+            assert (find(df, pat).count() == 1) == bool(expected)
+            assert (budgeted.matches.count() == 1) == bool(expected)
+            assert (find(old, pat).count() + new.count() > 0) == bool(expected)
+            return
+        assert sorted(tuple(r) for r in find(df, pat).collect()) == expected
+        assert sorted(tuple(r) for r in budgeted.matches.collect()) == expected
+        split = find(old, pat).collect() + new.collect()
+        assert sorted(tuple(r) for r in split) == expected
+    finally:
+        new._delta_cached.unpersist()
 
 
 @settings(

@@ -97,3 +97,22 @@ def test_registry_registration_order():
     assert list(reg) == list(contract._REG)
     assert len(reg) <= 50
     assert list(__spark_entry__.queries()) == list(reg)
+
+
+def test_every_package_module_imports():
+    """Every module of the package imports, so a module cut cannot
+    leave a dangling import behind in code no other test reaches."""
+    import importlib
+    import pkgutil
+
+    import motive_rdf_spark
+
+    names = [
+        m.name
+        for m in pkgutil.walk_packages(
+            motive_rdf_spark.__path__, motive_rdf_spark.__name__ + "."
+        )
+    ]
+    for name in names:
+        importlib.import_module(name)
+    assert "motive_rdf_spark.operators.bgp" in names
