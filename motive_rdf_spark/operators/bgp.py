@@ -34,6 +34,7 @@ selectivity probes when ``probe=True``.
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
@@ -73,10 +74,9 @@ class GraphStore:
     ``persist()`` plays that role on local mode.
 
     Memory policy (VERDICT r3 item 6): copies persist at
-    ``storage_level`` — default MEMORY_AND_DISK (was always the
-    implicit behavior: partitions that don't fit spill to local disk
+    MEMORY_AND_DISK — partitions that don't fit spill to local disk
     instead of evicting, so a graph larger than executor storage
-    degrades to disk reads, never recomputation-from-source).
+    degrades to disk reads, never recomputation-from-source.
     ``keep_plain=False`` drops the third, un-partitioned copy and
     serves plain scans (degree aggregations, probes, counts) from the
     s-partitioned copy — same rows, and ``groupBy("s")`` degree scans
@@ -86,15 +86,10 @@ class GraphStore:
     classes and faster on both (BENCH/BASELINE.md "GraphStore
     storage")."""
 
-    def __init__(
-        self,
-        triples: DataFrame,
-        storage_level=None,
-        keep_plain: bool = True,
-    ):
+    def __init__(self, triples: DataFrame, keep_plain: bool = True):
         from pyspark import StorageLevel
 
-        storage_level = storage_level or StorageLevel.MEMORY_AND_DISK
+        storage_level = StorageLevel.MEMORY_AND_DISK
         t = prepare_triples(triples)
         self._n: int | None = None
         # secondary cluster by p inside each hash partition: the
@@ -283,11 +278,30 @@ def _order_edges(
     return order
 
 
-def _distinct_edges(emb: DataFrame, pattern: Pattern) -> DataFrame:
-    """Per-edge triple distinctness (Find.java:286-316): no two pattern
-    edges bind the same triple. Only edge pairs that can collide on a
-    triple need the filter: equal constant predicates or any variable
-    predicate. ``emb`` carries one ``__tid_<i>`` column per edge."""
+def _injective(
+    emb: DataFrame, pattern: Pattern, present: set[str], evars: list[str]
+) -> DataFrame:
+    """Node-variable injectivity (Find.alreadyClaimed, Find.java:135-148):
+    one ``!=`` filter per node-variable pair that the edge binding
+    ``evars`` completes — both columns bound after it, not both before
+    (``present``) — so each pair is filtered once, as early as possible."""
+    cols = [var_col(v) for v in pattern.node_vars]
+    after = present.union(evars)
+    for i, a in enumerate(cols):
+        for b in cols[i + 1 :]:
+            if a in after and b in after and not (a in present and b in present):
+                emb = emb.filter(F.col(a) != F.col(b))
+    return emb
+
+
+def _project(emb: DataFrame, pattern: Pattern) -> DataFrame:
+    """The match output of a full expansion ``emb`` (one ``__tid_<i>``
+    column per edge). First per-edge triple distinctness
+    (Find.java:286-316): no two pattern edges bind the same triple, and
+    only edge pairs that can collide on a triple need the filter (equal
+    constant predicates or any variable predicate). Then one column per
+    variable, ``v1..vk``; a fully grounded pattern yields a single
+    ``matched`` row iff it matches."""
     edges = pattern.edges
     for i in range(len(edges)):
         for j in range(i + 1, len(edges)):
@@ -295,6 +309,55 @@ def _distinct_edges(emb: DataFrame, pattern: Pattern) -> DataFrame:
             if pi >= 0 and pj >= 0 and pi != pj:
                 continue
             emb = emb.filter(F.col(f"{TID}_{i}") != F.col(f"{TID}_{j}"))
+    out_cols = [var_col(v) for v in pattern.variables]
+    if not out_cols:  # fully grounded pattern
+        return emb.limit(1).select(F.lit(True).alias("matched"))
+    return emb.select(*out_cols)
+
+
+def _expand(
+    triples: DataFrame | GraphStore,
+    pattern: Pattern,
+    probe: bool,
+    on_round: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """The expansion cascade of ``find`` and ``find_budgeted``: the
+    leading edge scan, then one inner join (a cross join when no
+    variable is shared) per further edge in ``_order_edges`` order,
+    with node-variable injectivity injected as soon as it applies.
+    ``on_round`` maps the embedding after every round but the last."""
+    if not pattern.edges:
+        raise ValueError("empty pattern")
+    store = triples if isinstance(triples, GraphStore) else None
+    base = store.plain if store is not None else prepare_triples(triples)
+    order = _order_edges(pattern, base, probe)
+
+    # size-aware join strategy (see SHJ_HINT_MIN_TRIPLES): hint the
+    # graph-scan side shuffle_hash on large graphs so the build is the
+    # bounded scan slice and the (potentially exploding) embedding
+    # side streams — never the other way round
+    shj = store is not None and store.n_triples >= SHJ_HINT_MIN_TRIPLES
+
+    emb: DataFrame | None = None
+    present: set[str] = set()
+    for round_no, idx in enumerate(order):
+        edge = pattern.edges[idx]
+        src = store.for_edge(edge, present) if store is not None else base
+        scan = _edge_scan(src, edge, idx)
+        evars = [c for c in scan.columns if not c.startswith(TID)]
+        if emb is None:
+            emb = scan
+        else:
+            shared = [c for c in evars if c in present]
+            if shared:
+                emb = emb.join(scan.hint("shuffle_hash") if shj else scan, on=shared, how="inner")
+            else:
+                emb = emb.crossJoin(scan)
+        emb = _injective(emb, pattern, present, evars)
+        present.update(evars)
+        if on_round is not None and round_no < len(order) - 1:
+            emb = on_round(emb)
+    assert emb is not None
     return emb
 
 
@@ -314,52 +377,7 @@ def find(
     grounded pattern, returns a single-column DataFrame ``matched``
     with one row iff all edges exist as pairwise-distinct triples.
     """
-    if not pattern.edges:
-        raise ValueError("empty pattern")
-    store = triples if isinstance(triples, GraphStore) else None
-    base = store.plain if store is not None else prepare_triples(triples)
-
-    order = _order_edges(pattern, base, probe)
-    node_var_cols = [var_col(v) for v in pattern.node_vars]
-
-    # size-aware join strategy (see SHJ_HINT_MIN_TRIPLES): hint the
-    # graph-scan side shuffle_hash on large graphs so the build is the
-    # bounded scan slice and the (potentially exploding) embedding
-    # side streams — never the other way round
-    shj = store is not None and store.n_triples >= SHJ_HINT_MIN_TRIPLES
-
-    emb: DataFrame | None = None
-    present: set[str] = set()
-    injected: set[frozenset[str]] = set()
-    for idx in order:
-        edge = pattern.edges[idx]
-        src = store.for_edge(edge, present) if store is not None else base
-        scan = _edge_scan(src, edge, idx)
-        evars = [c for c in scan.columns if not c.startswith(TID)]
-        if emb is None:
-            emb = scan
-        else:
-            shared = [c for c in evars if c in present]
-            if shared:
-                emb = emb.join(scan.hint("shuffle_hash") if shj else scan, on=shared, how="inner")
-            else:
-                emb = emb.crossJoin(scan)
-        present.update(evars)
-        # inject node-var injectivity as soon as both columns exist
-        for i, a in enumerate(node_var_cols):
-            for b in node_var_cols[i + 1 :]:
-                key = frozenset((a, b))
-                if a in present and b in present and key not in injected:
-                    emb = emb.filter(F.col(a) != F.col(b))
-                    injected.add(key)
-
-    assert emb is not None
-    emb = _distinct_edges(emb, pattern)
-
-    out_cols = [var_col(v) for v in pattern.variables]
-    if not out_cols:  # fully grounded pattern
-        return emb.limit(1).select(F.lit(True).alias("matched"))
-    return emb.select(*out_cols)
+    return _project(_expand(triples, pattern, probe), pattern)
 
 
 def find_count(triples: DataFrame, pattern: Pattern, **kw) -> int:
@@ -440,76 +458,32 @@ def find_budgeted(
     produced from a truncated prefix is still a genuine match — the
     reference's exact contract (correct subset + ``timed_out=True``).
     """
-    if not pattern.edges:
-        raise ValueError("empty pattern")
-    store = triples if isinstance(triples, GraphStore) else None
-    base = store.plain if store is not None else prepare_triples(triples)
     start = time.monotonic()
     deadline = start + timeout_s
-
-    order = _order_edges(pattern, base, probe)
-    node_var_cols = [var_col(v) for v in pattern.node_vars]
-
-    # same size-aware strategy as find(), keeping the two plan-equal
-    shj = store is not None and store.n_triples >= SHJ_HINT_MIN_TRIPLES
-
-    emb: DataFrame | None = None
-    present: set[str] = set()
-    injected: set[frozenset[str]] = set()
     timed_out = False
-    for round_no, idx in enumerate(order):
-        edge = pattern.edges[idx]
-        src = store.for_edge(edge, present) if store is not None else base
-        scan = _edge_scan(src, edge, idx)
-        evars = [c for c in scan.columns if not c.startswith(TID)]
-        if emb is None:
-            emb = scan
-        else:
-            shared = [c for c in evars if c in present]
-            if shared:
-                emb = emb.join(scan.hint("shuffle_hash") if shj else scan, on=shared, how="inner")
-            else:
-                emb = emb.crossJoin(scan)
-        present.update(evars)
-        for i, a in enumerate(node_var_cols):
-            for b in node_var_cols[i + 1 :]:
-                key = frozenset((a, b))
-                if a in present and b in present and key not in injected:
-                    emb = emb.filter(F.col(a) != F.col(b))
-                    injected.add(key)
-        if round_no < len(order) - 1:
-            elapsed = time.monotonic() - start
-            if timed_out:
-                # budget gone: bounded truncate-then-materialize (cheap)
-                emb = emb.limit(max_matches).localCheckpoint(eager=True)
-            elif elapsed > soft_frac * timeout_s:
-                cap = cap_multiple * max_matches
-                ck = _checkpoint_until(emb.limit(cap), deadline)
-                if ck is None:
-                    # round cancelled at the deadline — fall back to the
-                    # lazy capped plan; downstream limits bound the work
-                    timed_out = True
-                    emb = emb.limit(max_matches)
-                else:
-                    emb = ck
-                    # cap saturation means the intermediate was truncated:
-                    # report partiality honestly (the row-budget analog of
-                    # the reference's match budget)
-                    if ck.count() >= cap or time.monotonic() > deadline:
-                        timed_out = True
-            # else: no pressure — stay lazy, identical plan to find()
 
-    assert emb is not None
-    emb = _distinct_edges(emb, pattern)
+    def materialize(emb: DataFrame) -> DataFrame:
+        nonlocal timed_out
+        if timed_out:
+            # budget gone: bounded truncate-then-materialize (cheap)
+            return emb.limit(max_matches).localCheckpoint(eager=True)
+        if time.monotonic() - start <= soft_frac * timeout_s:
+            return emb  # no pressure: stay lazy, identical plan to find()
+        cap = cap_multiple * max_matches
+        ck = _checkpoint_until(emb.limit(cap), deadline)
+        if ck is None:
+            # round cancelled at the deadline — fall back to the lazy
+            # capped plan; downstream limits bound the work
+            timed_out = True
+            return emb.limit(max_matches)
+        # cap saturation means the intermediate was truncated: report
+        # partiality honestly (the row-budget analog of the reference's
+        # match budget)
+        if ck.count() >= cap or time.monotonic() > deadline:
+            timed_out = True
+        return ck
 
-    out_cols = [var_col(v) for v in pattern.variables]
-    if not out_cols:
-        out = emb.limit(1).select(F.lit(True).alias("matched"))
-    else:
-        out = emb.select(*out_cols)
-    if timed_out:
-        out = out.limit(max_matches)
-    elif time.monotonic() > deadline:
-        timed_out = True
-        out = out.limit(max_matches)
-    return BudgetedMatches(matches=out, timed_out=timed_out)
+    out = _project(_expand(triples, pattern, probe, materialize), pattern)
+    if timed_out or time.monotonic() > deadline:
+        return BudgetedMatches(matches=out.limit(max_matches), timed_out=True)
+    return BudgetedMatches(matches=out, timed_out=False)

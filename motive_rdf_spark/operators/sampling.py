@@ -2,9 +2,8 @@
 
 Reproducibility is the contract: the same (seed, row) pair must select
 the same rows on any cluster size, any partitioning, any engine — so
-selection is a pure function of row identity via the md5-affine
-portable-hash pattern the MinHash/SimHash oracles already use
-(dedup.py): any engine with md5 reproduces the exact sample.
+selection is a pure function of row identity via an md5-affine
+portable hash: any engine with md5 reproduces the exact sample.
 
 - ``seeded_sample`` — Bernoulli keep/drop per row. Narrow (no shuffle,
   no RNG state): a filter on hash(id, seed) % precision. The

@@ -86,10 +86,6 @@ class SAConfig:
     sample_rows: int = 20
     retain: int = 100  # MaxObserver RETAIN (MultiParallel.java:25)
     seed: int | None = None
-    # collect graphs up to LOCAL_GRAPH_LIMIT triples into an indexed
-    # driver-side table so each candidate evaluation is Spark-free
-    # (operators/localgraph.py); False forces the distributed matcher
-    local_graph: bool = True
     # deterministic work budget for the LocalGraph matcher: the
     # candidate rows of each visited node of the depth-first match
     # enumeration, summed in depth-first order; enumeration stops at
@@ -158,7 +154,7 @@ class SimAnnealing:
                 self._match_src = triples
             self.triples = triples
             n, m, r = deg.graph_dims(triples)
-            if self.cfg.local_graph and m <= LOCAL_GRAPH_LIMIT:
+            if m <= LOCAL_GRAPH_LIMIT:
                 self._local = LocalGraph.from_df(triples)
         if self._local is not None:
             self._local_degs = self._local.degree_arrays(n, r)

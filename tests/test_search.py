@@ -96,6 +96,49 @@ def test_sa_retains_planted_motif(spark):
     g.unpersist()
 
 
+def test_sa_distributed_tier_equals_local(spark, monkeypatch):
+    """The distributed scoring tier gives the LocalGraph tier's
+    frequency and score on every branch of ``SimAnnealing._score``:
+    ``find``; ``find_budgeted`` (``max_time_s``); the distributed prune
+    (``prune_matches_df`` + ``score_motif``); and the driver prune with
+    the Spark degree-histogram score (no driver degree arrays)."""
+    from motive_rdf_spark import search
+    from motive_rdf_spark.operators import mdl_ops
+    from motive_rdf_spark.operators.localgraph import LocalGraph
+
+    tri = [(-1, 0, -2), (-1, 1, -3), (-2, 2, -3)]
+    g = planted_graph(spark, n=300, m=900, r=5, pattern_edges=tri, k=60, seed=3).persist()
+    g.count()
+    pats = [
+        Pattern(tri),
+        Pattern([(-1, 0, -2)]),
+        Pattern([(-1, -4, -2), (-2, -5, -3)]),  # predicate-variable chain
+    ]
+    local = SimAnnealing(LocalGraph.from_df(g), SAConfig(), init_pattern=pats[0])
+    want = [local._score(p) for p in pats]
+
+    monkeypatch.setattr(search, "LOCAL_GRAPH_LIMIT", -1)
+    branches = [
+        ("find", SAConfig()),
+        ("find_budgeted", SAConfig(max_time_s=600.0)),
+        ("prune_matches_df", SAConfig(driver_prune_threshold=0)),
+        ("spark_histogram", SAConfig()),
+    ]
+    for name, cfg in branches:
+        if name == "spark_histogram":
+            monkeypatch.setattr(mdl_ops, "DRIVER_DEGREE_LIMIT", -1)
+        sa = SimAnnealing(g, cfg, init_pattern=pats[0])
+        try:
+            assert sa._local is None
+            for p, (score, freq) in zip(pats, want):
+                got_score, got_freq = sa._score(p)
+                assert got_freq == freq, (name, p)
+                assert got_score == pytest.approx(score, rel=1e-9), (name, p)
+        finally:
+            sa.close()
+    g.unpersist()
+
+
 def test_extend_preserves_constant_anchor(spark):
     """EXTEND from a constant-anchored pattern must keep the constant as
     the new edge's anchor term (reference EXTEND keeps the anchor and
