@@ -21,8 +21,6 @@ at bench scale (1M+ rows).
 
 from __future__ import annotations
 
-import random
-
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 TRIPLE_SCHEMA = "s long, p long, o long"
@@ -250,52 +248,4 @@ def candidate_dict(spark: SparkSession, rows: int, hash_fn: str = "xx") -> DataF
         F.concat(F.lit("f"), F.col("id").cast("string"), F.lit("_fn")).alias("surface"),
         F.col("id").alias("entity_id"),
         (F.pmod(h, F.lit(1000)) / 1000.0).alias("prior"),
-    )
-
-
-def code_corpus_table(spark: SparkSession, rows: int, seed: int = 42, hash_fn: str = "xx") -> DataFrame:
-    """Deterministic *varied* source-file corpus for code-quality
-    filtering (StarCoder/BigCode-style heuristics need files that
-    actually differ in shape — ``source_code_table``'s fixed 4-line
-    template would make every metric constant).
-
-    Row ``k``'s content, newline-joined (no trailing newline):
-
-    - ``# AUTOGENERATED - DO NOT EDIT`` header when ``k % 17 == 0``;
-    - ``import {module}`` (module from the closed MODULES vocabulary);
-    - ``pick(11) % 4`` comment lines ``# note``;
-    - ``def f{k}(x):`` / ``    return x + {k}``;
-    - a final line of ``'x' * (pick(12) % 180 + 5)`` (long-line signal).
-
-    Entirely native expressions; ``hash_fn="md5"`` makes the table
-    byte-identical reconstructable in DuckDB.
-    """
-    df = spark.range(rows).withColumnRenamed("id", "k")
-
-    def pick(salt: int, modulus: int) -> Column:
-        return F.pmod(seeded_hash(hash_fn, F.col("k"), F.lit(seed), F.lit(salt)), F.lit(modulus))
-
-    module = F.element_at(
-        F.array(*[F.lit(x) for x in MODULES]), (pick(2, len(MODULES)) + 1).cast("int")
-    )
-    n_com = pick(11, 4).cast("int")
-    long_len = (pick(12, 180) + 5).cast("int")
-    k_s = F.col("k").cast("string")
-    header = F.when(F.col("k") % 17 == 0, F.lit("# AUTOGENERATED - DO NOT EDIT"))
-    comments = F.when(n_com > 0, F.array_join(F.array_repeat(F.lit("# note"), n_com), "\n"))
-    # concat_ws skips NULL args (Spark and DuckDB agree), so the
-    # optional header/comment blocks vanish without empty lines
-    content = F.concat_ws(
-        "\n",
-        header,
-        F.concat(F.lit("import "), module),
-        comments,
-        F.concat(F.lit("def f"), k_s, F.lit("(x):")),
-        F.concat(F.lit("    return x + "), k_s),
-        F.repeat(F.lit("x"), long_len),
-    )
-    return df.select(
-        F.col("k").alias("file_id"),
-        F.concat(F.lit("src/file"), k_s, F.lit(".py")).alias("path"),
-        content.alias("content"),
     )

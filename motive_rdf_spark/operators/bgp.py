@@ -27,8 +27,7 @@ on long keys; AQE handles skewed hub values (rdf:type-like predicates)
 via skew-join splitting, and runtime Bloom-filter joins recreate the
 reference's semijoin candidate reduction (Find.java:197-216). Join
 *order* (the MRV analog, Find.java:101-102) is chosen here at
-plan-construction time: constants-first heuristic, or exact per-edge
-selectivity probes when ``probe=True``.
+plan-construction time by a constants-first heuristic.
 """
 
 from __future__ import annotations
@@ -69,24 +68,15 @@ class GraphStore:
     already hash-distributed on the join key and Spark elides that
     exchange; the surviving partitioning also propagates into the
     embedding, cutting exchanges on later joins keyed on the same
-    variable. On a real cluster the same layout is two bucketed
-    tables written once at ingest (``BucketedGraphStore`` below);
-    ``persist()`` plays that role on local mode.
+    variable. ``plain`` is the third, un-partitioned copy that serves
+    degree aggregations and counts.
 
     Memory policy (VERDICT r3 item 6): copies persist at
     MEMORY_AND_DISK — partitions that don't fit spill to local disk
     instead of evicting, so a graph larger than executor storage
-    degrades to disk reads, never recomputation-from-source.
-    ``keep_plain=False`` drops the third, un-partitioned copy and
-    serves plain scans (degree aggregations, probes, counts) from the
-    s-partitioned copy — same rows, and ``groupBy("s")`` degree scans
-    then skip their exchange too. Budget: 2×|G| encoded instead of
-    3×|G| (~15.6 B/triple per copy columnar); at 69M triples measured
-    1.99 GiB vs 3.02 GiB persisted, identical answers on both query
-    classes and faster on both (BENCH/BASELINE.md "GraphStore
-    storage")."""
+    degrades to disk reads, never recomputation-from-source."""
 
-    def __init__(self, triples: DataFrame, keep_plain: bool = True):
+    def __init__(self, triples: DataFrame):
         from pyspark import StorageLevel
 
         storage_level = StorageLevel.MEMORY_AND_DISK
@@ -103,16 +93,12 @@ class GraphStore:
         # of a scan drops from |G| to ~|G|/r (VERDICT r2 item 6).
         self.by_s = t.repartition("s").sortWithinPartitions("p", "s").persist(storage_level)
         self.by_o = t.repartition("o").sortWithinPartitions("p", "o").persist(storage_level)
-        if keep_plain:
-            # if preparation derived a new plan (dedupe + tid), cache
-            # it — degree aggregations and probes read .plain repeatedly
-            self._own_plain = t is not triples
-            if self._own_plain:
-                t = t.persist(storage_level)
-            self.plain = t
-        else:
-            self._own_plain = False
-            self.plain = self.by_s
+        # if preparation derived a new plan (dedupe + tid), cache it —
+        # degree aggregations and counts read .plain repeatedly
+        self._own_plain = t is not triples
+        if self._own_plain:
+            t = t.persist(storage_level)
+        self.plain = t
 
     def for_edge(self, edge: tuple[int, int, int], present: set[str]) -> DataFrame:
         """The copy whose partitioning matches the join keys this edge
@@ -141,57 +127,6 @@ class GraphStore:
         self.by_o.unpersist(blocking)
         if self._own_plain:
             self.plain.unpersist(blocking)
-
-
-def write_bucketed_graph(
-    triples: DataFrame, name: str, buckets: int = 32, path: str | None = None
-) -> None:
-    """Ingest-time bucketed layout for cluster deployments: the same
-    two clusterings GraphStore persists in memory, written once as
-    bucketed+sorted tables (``<name>_by_s`` bucketed on s, ``<name>_by_o``
-    on o, both sorted by (p, key) for min/max predicate skipping).
-    Every later session scans them exchange-free on the bucket key with
-    zero load cost — memory holds only what a query touches, so this is
-    the path for graphs past executor storage (the 2-3×|G| persist
-    budget does not apply). ``path`` makes them external tables rooted
-    there instead of the session warehouse."""
-    t = prepare_triples(triples)
-    for key, sort in (("s", ("p", "s")), ("o", ("p", "o"))):
-        w = t.write.bucketBy(buckets, key).sortBy(*sort).mode("overwrite")
-        if path is not None:
-            w = w.option("path", f"{path}/by_{key}")
-        w.saveAsTable(f"{name}_by_{key}")
-
-
-class BucketedGraphStore(GraphStore):
-    """GraphStore served from the bucketed tables ``write_bucketed_graph``
-    materialized — the cluster-scale storage mode behind the same
-    ``for_edge`` interface. Scans arrive hash-distributed on the join
-    key straight from storage (bucketed FileScan reports the
-    partitioning, so the expansion join elides the graph-side exchange
-    exactly like the persisted copies); nothing is pinned in executor
-    memory."""
-
-    def __init__(self, spark, name: str):
-        self.by_s = spark.table(f"{name}_by_s")
-        self.by_o = spark.table(f"{name}_by_o")
-        self.plain = self.by_s
-        self._own_plain = False
-        self._n = None
-
-    def unpersist(self) -> None:  # nothing pinned
-        pass
-
-
-def storage_bytes(spark) -> tuple[int, int]:
-    """(memory_bytes, disk_bytes) currently held by persisted RDDs —
-    the numbers the UI's Storage tab shows (SparkContext
-    getRDDStorageInfo). Used to measure GraphStore's footprint
-    (BENCH/BASELINE.md)."""
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    mem = sum(i.memSize() for i in infos)
-    disk = sum(i.diskSize() for i in infos)
-    return mem, disk
 
 
 #: expansion joins hint shuffle_hash only past this graph size. Below
@@ -237,35 +172,29 @@ def _edge_scan(triples: DataFrame, edge: tuple[int, int, int], idx: int) -> Data
     return df.select(*sel)
 
 
-def _order_edges(
-    pattern: Pattern, triples: DataFrame, probe: bool
-) -> list[int]:
+def _order_edges(pattern: Pattern, start: int | None = None) -> list[int]:
     """Join-order heuristic replacing the reference's MRV fail-first
     ordering (Find.java:101-102, variablesRemaining 382-394).
 
-    Greedy left-deep: start from the most selective edge, then always
-    pick a connected edge (shares a variable with what's bound) with
-    the best selectivity estimate. ``probe=True`` runs one cheap
-    ``count()`` per edge (pushed-down scans) for exact base
-    selectivities; otherwise constants-count is the proxy.
+    Greedy left-deep: start from the most selective edge (or from edge
+    ``start`` when given — ``find_delta`` pins each run's Δ edge, the
+    most selective relation by construction), then always pick a
+    connected edge (shares a variable with what's bound) with the best
+    selectivity estimate. Constants count is the proxy: fewer variables
+    → more selective, and predicate constants help most.
     """
     edges = list(pattern.edges)
-    n = len(edges)
-    if probe:
-        costs = [
-            float(_edge_scan(triples, e, i).count()) for i, e in enumerate(edges)
-        ]
-    else:
-        # fewer variables → more selective; predicate constants help most
-        costs = [
-            sum((t < 0) * (2.0 if pos != 1 else 1.0) for pos, t in enumerate(e))
-            for e in edges
-        ]
+    costs = [
+        sum((t < 0) * (2.0 if pos != 1 else 1.0) for pos, t in enumerate(e))
+        for e in edges
+    ]
+    if start is not None:
+        costs[start] = float("-inf")  # the pinned head wins the first pick
 
     def edge_vars(e) -> set[int]:
         return {t for t in e if t < 0}
 
-    remaining = set(range(n))
+    remaining = set(range(len(edges)))
     order: list[int] = []
     bound: set[int] = set()
     while remaining:
@@ -318,7 +247,6 @@ def _project(emb: DataFrame, pattern: Pattern) -> DataFrame:
 def _expand(
     triples: DataFrame | GraphStore,
     pattern: Pattern,
-    probe: bool,
     on_round: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """The expansion cascade of ``find`` and ``find_budgeted``: the
@@ -330,7 +258,7 @@ def _expand(
         raise ValueError("empty pattern")
     store = triples if isinstance(triples, GraphStore) else None
     base = store.plain if store is not None else prepare_triples(triples)
-    order = _order_edges(pattern, base, probe)
+    order = _order_edges(pattern)
 
     # size-aware join strategy (see SHJ_HINT_MIN_TRIPLES): hint the
     # graph-scan side shuffle_hash on large graphs so the build is the
@@ -361,11 +289,7 @@ def _expand(
     return emb
 
 
-def find(
-    triples: DataFrame | GraphStore,
-    pattern: Pattern,
-    probe: bool = False,
-) -> DataFrame:
+def find(triples: DataFrame | GraphStore, pattern: Pattern) -> DataFrame:
     """All matches of ``pattern`` in ``triples`` — the Spark equivalent of
     ``Find.find(pattern, graph)`` (Find.java:40-72).
 
@@ -377,12 +301,12 @@ def find(
     grounded pattern, returns a single-column DataFrame ``matched``
     with one row iff all edges exist as pairwise-distinct triples.
     """
-    return _project(_expand(triples, pattern, probe), pattern)
+    return _project(_expand(triples, pattern), pattern)
 
 
-def find_count(triples: DataFrame, pattern: Pattern, **kw) -> int:
+def find_count(triples: DataFrame, pattern: Pattern) -> int:
     """Match count — the support statistic (SimAnnealing.java:156,204)."""
-    return find(triples, pattern, **kw).count()
+    return find(triples, pattern).count()
 
 
 @dataclass
@@ -431,25 +355,30 @@ def _checkpoint_until(df: DataFrame, deadline: float) -> DataFrame | None:
     return result["df"]
 
 
+#: ``find_budgeted`` stays lazy (plan-identical to ``find``) while the
+#: elapsed time is under this fraction of its budget ...
+SOFT_FRAC = 0.25
+#: ... and past it caps each materialized intermediate at this many
+#: times ``max_matches`` rows.
+CAP_MULTIPLE = 10
+
+
 def find_budgeted(
     triples: DataFrame | GraphStore,
     pattern: Pattern,
     timeout_s: float,
     max_matches: int = 200_000,
-    probe: bool = False,
-    soft_frac: float = 0.25,
-    cap_multiple: int = 10,
 ) -> BudgetedMatches:
     """``find`` with the reference's wall-clock match budget
     (Find.java:59-69,116-120): bounded work per pattern, partial
     results allowed, ``timed_out`` reported.
 
     The no-pressure path is plan-identical to plain ``find``: while
-    elapsed time stays under ``soft_frac``·budget the expansion stays
+    elapsed time stays under ``SOFT_FRAC``·budget the expansion stays
     lazy (one whole-plan Catalyst-optimized job at the end — the
     reference charges only a clock check per step, Find.java:59-69;
     VERDICT r2 item 3). Once a round crosses the soft threshold, each
-    further intermediate is capped at ``cap_multiple``·``max_matches``
+    further intermediate is capped at ``CAP_MULTIPLE``·``max_matches``
     rows and materialized under a deadline watchdog
     (``_checkpoint_until``) so the clock is enforced *during* the
     round, not just after it. A cancelled or cap-saturated round flips
@@ -467,9 +396,9 @@ def find_budgeted(
         if timed_out:
             # budget gone: bounded truncate-then-materialize (cheap)
             return emb.limit(max_matches).localCheckpoint(eager=True)
-        if time.monotonic() - start <= soft_frac * timeout_s:
+        if time.monotonic() - start <= SOFT_FRAC * timeout_s:
             return emb  # no pressure: stay lazy, identical plan to find()
-        cap = cap_multiple * max_matches
+        cap = CAP_MULTIPLE * max_matches
         ck = _checkpoint_until(emb.limit(cap), deadline)
         if ck is None:
             # round cancelled at the deadline — fall back to the lazy
@@ -483,7 +412,7 @@ def find_budgeted(
             timed_out = True
         return ck
 
-    out = _project(_expand(triples, pattern, probe, materialize), pattern)
+    out = _project(_expand(triples, pattern, materialize), pattern)
     if timed_out or time.monotonic() > deadline:
         return BudgetedMatches(matches=out.limit(max_matches), timed_out=True)
     return BudgetedMatches(matches=out, timed_out=False)

@@ -42,36 +42,11 @@ from motive_rdf_spark.operators.bgp import (
     TID,
     _edge_scan,
     _injective,
+    _order_edges,
     _project,
     prepare_triples,
 )
 from motive_rdf_spark.patterns import Pattern, var_col
-
-
-def _order_from(pattern: Pattern, start: int) -> list[int]:
-    """Left-deep order pinned to start at edge ``start``, then greedy
-    connected (shares a variable with the bound set), most-constant
-    first — the static heuristic of bgp._order_edges with a forced
-    head (the Δ edge is the most selective relation by construction)."""
-    edges = list(pattern.edges)
-
-    def cost(e) -> float:
-        return sum((t < 0) * (2.0 if pos != 1 else 1.0) for pos, t in enumerate(e))
-
-    def edge_vars(e) -> set[int]:
-        return {t for t in e if t < 0}
-
-    order = [start]
-    bound = edge_vars(edges[start])
-    remaining = set(range(len(edges))) - {start}
-    while remaining:
-        connected = [i for i in remaining if edge_vars(edges[i]) & bound]
-        pool = connected or sorted(remaining)
-        best = min(pool, key=lambda i: (cost(edges[i]), i))
-        order.append(best)
-        bound |= edge_vars(edges[best])
-        remaining.discard(best)
-    return order
 
 
 #: broadcast the Δ-driven leading embedding into its first expansion
@@ -168,7 +143,7 @@ def find_delta(
         # it); refreshed by the step checkpoints below.
         emb_count: int | None = None
         present: set[str] = set()
-        order = _order_from(pattern, i)
+        order = _order_edges(pattern, start=i)
         for pos, idx in enumerate(order):
             if idx < i:
                 src = (

@@ -375,8 +375,9 @@ class LocalGraph:
 
     def _order(self, pattern: Pattern) -> list[int]:
         """Greedy selective-first, connected-next edge order — the
-        in-memory analog of bgp._order_edges(probe=True), with exact
-        constants-only candidate counts from the indexes."""
+        greedy loop of bgp._order_edges, with exact constants-only
+        candidate counts from the indexes as the costs instead of its
+        constants-count proxy."""
         edges = list(pattern.edges)
         costs = [
             len(self._rows(*(t if t >= 0 else None for t in e))) for e in edges

@@ -19,11 +19,13 @@ needs only a handful of rows (`limit(sample_rows).collect()`), never a
 full materialization.
 
 Parallel chains (SAParallel.java:45-127): ``sa_parallel`` runs N
-independent chains in driver threads sharing one SparkSession — Spark
+independent chains and merges per-chain results keeping the min score
+per canonical pattern (SAParallel.register, SAParallel.java:111-127).
+A graph within ``LOCAL_GRAPH_LIMIT`` is collected once and its chains
+run as forked processes over it (``sa_parallel_local``); a larger one
+runs its chains in driver threads sharing one SparkSession, so Spark
 schedules their jobs concurrently across executors (the cluster-
-friendly replacement for the reference's shared-heap thread pool) —
-and merges per-chain results keeping the min score per canonical
-pattern (SAParallel.register, SAParallel.java:111-127).
+friendly replacement for the reference's shared-heap thread pool).
 
 Scale: every scoring job is bounded by ``max_matches`` (the analog of
 the reference's wall-clock match budget, Find.java:59-69) so a
@@ -277,7 +279,9 @@ class SimAnnealing:
     # -- initialization (SimAnnealing.java:146-152) ----------------------
 
     def _init_pattern(self) -> Pattern:
-        if self.triples is None:  # pure-local mode: no Spark session
+        # keyed on the tier, not the input type: SimAnnealing(df) and
+        # SimAnnealing(LocalGraph.from_df(df)) start from the same triple
+        if self._local is not None:
             g = self._local
             i = self.rng.randrange(g.m)
             return Pattern([(int(g.S[i]), int(g.P[i]), -1)])
@@ -490,19 +494,25 @@ def sa_parallel(
     config: SAConfig | None = None,
     init_pattern: Pattern | None = None,
 ) -> SAState:
-    """N independent chains in driver threads (SAParallel.java:45-127);
-    results merged with min-score-wins per canonical pattern.
-    ``init_pattern`` warm-starts every chain (the reference's SAParallel
-    constructor takes the same seed pattern — Synthetic.java:205).
+    """N independent chains (SAParallel.java:45-127); results merged
+    with min-score-wins per canonical pattern. ``init_pattern``
+    warm-starts every chain (the reference's SAParallel constructor
+    takes the same seed pattern — Synthetic.java:205).
 
-    The graph is wrapped in ONE shared GraphStore (pre-partitioned
-    copies) so all chains' match jobs reuse it; released on return."""
+    A graph within ``LOCAL_GRAPH_LIMIT`` is collected once and searched
+    by ``sa_parallel_local``'s worker processes. A larger graph is
+    wrapped in ONE shared GraphStore (pre-partitioned copies) so all
+    chains' match jobs reuse it; the chains run in driver threads and
+    the store is released on return."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from motive_rdf_spark.operators.bgp import GraphStore
+    from motive_rdf_spark.operators.bgp import GraphStore, prepare_triples
 
     base = config or SAConfig()
     own_store = not isinstance(triples, GraphStore)
+    plain = prepare_triples(triples) if own_store else triples.plain
+    if deg.graph_dims(plain)[1] <= LOCAL_GRAPH_LIMIT:
+        return sa_parallel_local(LocalGraph.from_df(plain), chains, base, init_pattern)
     src = GraphStore(triples) if own_store else triples
 
     sas: list[SimAnnealing] = []
@@ -567,8 +577,9 @@ def sa_parallel_local(
     are built once and never copied). A chain's matcher, prune and
     scorer are numpy array code, but the loop around them — transitions,
     canonicalization, the score memo — is Python and holds the GIL;
-    ``sa_parallel``'s driver THREADS parallelize Spark jobs, not Python
-    loops, so pure-local chains need processes. Chains never touch
+    driver THREADS (``sa_parallel`` above ``LOCAL_GRAPH_LIMIT``)
+    parallelize Spark jobs, not Python loops, so pure-local chains need
+    processes; ``sa_parallel`` comes here for graphs within the limit. Chains never touch
     Spark (SimAnnealing in LocalGraph mode runs Spark-free), making
     the fork safe with an active session. Chain ``i`` runs with seed
     ``config.seed + i``; with ``max_steps`` set (and no ``max_time_s``)

@@ -57,12 +57,6 @@ def test_find1_vee_injectivity(spark):
     assert rows_set(m) == expected
 
 
-def test_find1_probe_ordering_same_result(spark):
-    g = find1_graph(spark)
-    pat = Pattern([(-1, -4, -3), (-2, -5, -3)])
-    assert rows_set(find(g, pat, probe=True)) == rows_set(find(g, pat))
-
-
 def test_hub_generator_counts(spark):
     # ?n3-[0]->0, ?n3-[1]->1 has exactly `middle` matches (FindTest.java:191-212)
     middle = 37
@@ -228,77 +222,6 @@ def test_graphstore_equal_results_fewer_exchanges(spark):
     g.unpersist()
 
 
-def test_bucketed_graphstore_equal_results_fewer_exchanges(spark, tmp_path):
-    """The bucketed-table storage mode (write_bucketed_graph +
-    BucketedGraphStore) must give identical matches to the plain path
-    and elide graph-side exchanges straight from storage — the cluster
-    deployment's ingest-once layout, with nothing pinned in memory."""
-    from motive_rdf_spark.operators.bgp import (
-        BucketedGraphStore,
-        prepare_triples,
-        write_bucketed_graph,
-    )
-
-    g = prepare_triples(chain_graph(spark, 300)).persist()
-    g.count()
-    name = "bstore_test"
-    try:
-        # external-table location: keep the repo/warehouse dir clean
-        for suffix in ("by_s", "by_o"):
-            spark.sql(f"DROP TABLE IF EXISTS {name}_{suffix}")
-        write_bucketed_graph(g, name, buckets=8, path=str(tmp_path))
-        store = BucketedGraphStore(spark, name)
-        pat = Pattern([(-1, 0, 0), (-1, 2, -2), (-2, 1, 1)])
-        confs = {
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-        }
-        old = {k: spark.conf.get(k, None) for k in confs}
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
-            d_plain, d_store = find(g, pat), find(store, pat)
-            assert rows_set(d_plain) == rows_set(d_store)
-            ex_plain = _executed_op_counts(d_plain).get("Exchange", 0)
-            ex_store = _executed_op_counts(d_store).get("Exchange", 0)
-            assert ex_store < ex_plain, (ex_store, ex_plain)
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-    finally:
-        for suffix in ("by_s", "by_o"):
-            spark.sql(f"DROP TABLE IF EXISTS {name}_{suffix}")
-    g.unpersist()
-
-
-def test_graphstore_keep_plain_false_same_results_two_copies(spark):
-    """keep_plain=False serves plain scans from the s-partitioned copy:
-    identical matches and degree counts, one fewer persisted copy, and
-    storage_bytes sees a smaller footprint than the 3-copy store."""
-    from motive_rdf_spark.operators.bgp import GraphStore, storage_bytes
-
-    g = chain_graph(spark, 400)
-    full = GraphStore(g)
-    full.by_s.count(), full.by_o.count(), full.plain.count()
-    mem3, _ = storage_bytes(spark)
-    pat = Pattern([(-1, 0, 0), (-1, 2, -2)])
-    res_full = rows_set(find(full, pat))
-    deg_full = rows_set(full.plain.groupBy("s").count())
-    full.unpersist(blocking=True)
-
-    lean = GraphStore(g, keep_plain=False)
-    lean.by_s.count(), lean.by_o.count()
-    mem2, _ = storage_bytes(spark)
-    assert rows_set(find(lean, pat)) == res_full
-    assert rows_set(lean.plain.groupBy("s").count()) == deg_full
-    assert lean.plain is lean.by_s
-    assert 0 < mem2 < mem3, (mem2, mem3)
-    lean.unpersist()
-
-
 def test_find_budgeted_no_pressure_is_plan_identical_to_find(spark):
     """With a generous budget the budgeted matcher must stay lazy — no
     per-round localCheckpoint (which shows up as LogicalRDD/ExistingRDD
@@ -322,18 +245,19 @@ def test_find_budgeted_no_pressure_is_plan_identical_to_find(spark):
     assert skel(plan) == skel(find_plan)
 
 
-def test_find_budgeted_cap_saturation_reports_partial(spark):
+def test_find_budgeted_cap_saturation_reports_partial(spark, monkeypatch):
     """If the soft-threshold cap truncates an intermediate, the result
     must be flagged timed_out even though the clock never expired (the
     row-budget analog of the reference's match budget)."""
+    from motive_rdf_spark.operators import bgp
     from motive_rdf_spark.operators.bgp import find_budgeted
 
     g = hub_graph(spark, 300).persist()
     g.count()
     pat = Pattern([(-1, -4, -3), (-2, -5, -3)])
-    bm = find_budgeted(
-        g, pat, timeout_s=1e9, max_matches=10, soft_frac=0.0, cap_multiple=2
-    )
+    monkeypatch.setattr(bgp, "SOFT_FRAC", 0.0)
+    monkeypatch.setattr(bgp, "CAP_MULTIPLE", 2)
+    bm = find_budgeted(g, pat, timeout_s=1e9, max_matches=10)
     assert bm.timed_out
     got = rows_set(bm.matches)
     assert 0 < len(got) <= 10

@@ -16,8 +16,10 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
+from motive_rdf_spark.operators import bgp
 from motive_rdf_spark.operators.bgp import find, find_budgeted, prepare_triples
 from motive_rdf_spark.operators.delta import find_delta
 from motive_rdf_spark.patterns import renumber
@@ -103,11 +105,12 @@ def test_find_matches_bruteforce(spark, pat, seed):
         spark.createDataFrame(triples, "s long, p long, o long")
     )
     expected = _brute_find(triples, pat)
-    # soft_frac=0 materializes every round under the deadline watchdog:
+    # SOFT_FRAC=0 materializes every round under the deadline watchdog:
     # the per-step checkpoint path, not find()'s single lazy plan
-    budgeted = find_budgeted(
-        df, pat, timeout_s=1e9, max_matches=10**6, soft_frac=0.0
-    )
+    # (a context, since hypothesis reuses function-scoped fixtures)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(bgp, "SOFT_FRAC", 0.0)
+        budgeted = find_budgeted(df, pat, timeout_s=1e9, max_matches=10**6)
     assert not budgeted.timed_out
     # find(old) ⊎ find_delta(old, Δ) = find(old ∪ Δ), split at a
     # seed-chosen index (either side may be empty)

@@ -116,3 +116,47 @@ def test_every_package_module_imports():
     for name in names:
         importlib.import_module(name)
     assert "motive_rdf_spark.operators.bgp" in names
+
+
+def test_scripts_import_only_existing_names():
+    """Every ``from motive_rdf_spark... import name`` (and ``import
+    motive_rdf_spark...``) in the scripts outside the package resolves,
+    so a cut cannot strand a tool, job or benchmark script. The scripts
+    are parsed, not run: most import inside functions."""
+    import ast
+    import importlib
+    import importlib.util
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    scripts = [root / "bench.py", root / "__spark_entry__.py"]
+    for d in ("tools", "jobs", "perfbench"):
+        scripts += sorted((root / d).glob("*.py"))
+
+    def resolves(module: str, name: str | None) -> bool:
+        mod = importlib.import_module(module)
+        if name is None or hasattr(mod, name):
+            return True
+        return importlib.util.find_spec(f"{module}.{name}") is not None
+
+    unresolved = []
+    for path in scripts:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.ImportFrom) and node.level == 0:
+                wanted = [(node.module or "", a.name) for a in node.names]
+            elif isinstance(node, ast.Import):
+                wanted = [(a.name, None) for a in node.names]
+            else:
+                continue
+            for module, name in wanted:
+                if module.split(".")[0] != "motive_rdf_spark":
+                    continue
+                try:
+                    ok = resolves(module, name)
+                except ImportError:
+                    ok = False
+                if not ok:
+                    where = f"{path.relative_to(root)}:{node.lineno}"
+                    unresolved.append(f"{where} {module} {name or ''}".rstrip())
+    assert len(scripts) > 10
+    assert not unresolved, unresolved

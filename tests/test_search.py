@@ -176,6 +176,41 @@ def test_sa_parallel_merges_chains(spark):
     g.unpersist()
 
 
+def test_sa_dataframe_tier_equals_localgraph(spark):
+    """Below LOCAL_GRAPH_LIMIT a DataFrame input takes the LocalGraph
+    search path end to end: a cold-started chain picks its first triple
+    with its own rng, so ``SimAnnealing(df)`` and
+    ``SimAnnealing(LocalGraph.from_df(df))`` run the same trajectory,
+    and ``sa_parallel(df)`` merges the same chains as
+    ``sa_parallel_local``."""
+    from motive_rdf_spark.operators.bgp import prepare_triples
+    from motive_rdf_spark.operators.localgraph import LocalGraph
+    from motive_rdf_spark.search import sa_parallel_local
+
+    def summary(state):
+        res = sorted(
+            (str(r.pattern), r.score, r.frequency) for r in state.results.values()
+        )
+        return res, state.num_pos, state.timed_out_count
+
+    pat = [(-1, 0, -2), (-1, 1, -3), (-2, 2, -3)]
+    # prepared like the CLI's load_dataset: deduped, with triple ids
+    df = prepare_triples(
+        planted_graph(spark, n=300, m=900, r=5, pattern_edges=pat, k=60, seed=3)
+    ).persist()
+    df.count()
+    lg = LocalGraph.from_df(df)
+    cfg = SAConfig(iterations=200, seed=7, sample_rows=10, max_steps=2000)
+
+    a, b = SimAnnealing(df, cfg), SimAnnealing(lg, cfg)
+    assert summary(a.run()) == summary(b.run())
+    # the whole trajectory, not just what beat the null model
+    assert a.state.score_cache == b.state.score_cache
+    assert (a.pattern, a.score) == (b.pattern, b.score)
+    assert summary(sa_parallel(df, 3, cfg)) == summary(sa_parallel_local(lg, 3, cfg))
+    df.unpersist()
+
+
 def test_rescore_exact_restores_det_ranking(spark):
     """SA under a harsh per-candidate step budget retains truncated
     scores; rescore_exact must (a) emit ascending deterministic-exact
