@@ -35,7 +35,9 @@ the per-edge distinctness filters compose across sources unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import functools
+
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from motive_rdf_spark.operators.bgp import (
     GraphStore,
@@ -47,6 +49,7 @@ from motive_rdf_spark.operators.bgp import (
     prepare_triples,
 )
 from motive_rdf_spark.patterns import Pattern, var_col
+from motive_rdf_spark.threads import side_by_side
 
 
 #: broadcast the Δ-driven leading embedding into its first expansion
@@ -79,15 +82,15 @@ def find_delta(
     disjointness, e.g. a ledgered snapshot append).
 
     Each run materializes its INTERMEDIATE embedding
-    (``localCheckpoint`` + count) after every expansion whose input
-    embedding was broadcast-small, so the next join can broadcast it
-    too and stream the big graph scan exchange-free. The k runs are
-    built on driver threads so these per-run jobs overlap.
+    (``localCheckpoint``, row count observed) after every expansion
+    that stays broadcast-small, so the next join can broadcast it too
+    and stream the big graph scan exchange-free. The k runs are built
+    on driver threads so these per-run jobs overlap.
 
-    The (small) prepared delta is persisted and counted up front: the
-    count funds the per-run EMPTY-Δ SHORT-CIRCUIT — run *i* is skipped
-    outright when edge *i*'s filtered Δ scan has no rows (a cheap
-    cached probe), so a delta that touches only some relations costs
+    The (small) prepared delta is persisted and counted per predicate
+    up front: the counts fund the per-run EMPTY-Δ SHORT-CIRCUIT — run
+    *i* is skipped outright when edge *i*'s filtered Δ scan has no rows
+    (a cheap cached probe), so a delta that touches only some relations costs
     only those cascades (VERDICT r4 item 4) — and the cache is read k
     times instead of re-deriving the anti-join per run. The returned
     DataFrame exposes the cached delta as ``._delta_cached``; whoever
@@ -102,15 +105,13 @@ def find_delta(
     if not assume_new:
         delta_p = delta_p.join(old_p.select("s", "p", "o"), ["s", "p", "o"], "left_anti")
     delta_p = delta_p.persist()
-    delta_n = delta_p.count()
-    # Δ predicate stats for the short-circuit below: ONE tiny job over
-    # the cached delta instead of k isEmpty probes (per-job latency is
-    # the delta path's main overhead at small |Δ|)
-    delta_preds: set[int] = (
-        {r["p"] for r in delta_p.select("p").distinct().collect()}
-        if delta_n
-        else set()
-    )
+    # ONE job fills the Δ cache and yields both |Δ| and the Δ predicate
+    # set for the short-circuit below (instead of a count, then k
+    # isEmpty probes: per-job latency is the delta path's main overhead
+    # at small |Δ|)
+    per_pred = {r["p"]: r["count"] for r in delta_p.groupBy("p").count().collect()}
+    delta_n = sum(per_pred.values())
+    delta_preds = set(per_pred)
     full_p = old_p.select("s", "p", "o", TID).unionByName(
         delta_p.select("s", "p", "o", TID)
     )
@@ -178,32 +179,36 @@ def find_delta(
             emb = _injective(emb, pattern, present, evars)
             present.update(evars)
             # adaptive step materialization (VERDICT r4 item 4): while
-            # the embedding provably stayed broadcast-small, checkpoint
-            # and count it so the NEXT expansion can broadcast it too —
-            # k-1 exchange-free streamed scans per run instead of k-1
-            # shuffles of the big graph. Never materialize the final
-            # embedding (it is the run's output and may be huge); once
-            # a count comes back big, later joins fall back to the
-            # lazy shuffled plan.
+            # the embedding stays broadcast-small, checkpoint and count
+            # it so the NEXT expansion can broadcast it too — k-1
+            # exchange-free streamed scans per run instead of k-1
+            # shuffles of the big graph. The gate is the size AFTER the
+            # join (a hub can fan a small input out without bound):
+            # at most BROADCAST_MAX_DELTA + 1 rows are checkpointed, and
+            # their observed count says whether that was all of them.
+            # Past the bound, or at the final embedding (the run's
+            # output), the lazy shuffled plan goes on.
             if small and pos > 0 and pos < len(order) - 1:
-                emb = emb.localCheckpoint(eager=True)
-                emb_count = emb.count()
+                obs = Observation()
+                head = (
+                    emb.limit(BROADCAST_MAX_DELTA + 1)
+                    .observe(obs, F.count("*").alias("n"))
+                    .localCheckpoint(eager=True)
+                )
+                if obs.get["n"] <= BROADCAST_MAX_DELTA:
+                    emb, emb_count = head, obs.get["n"]
         assert emb is not None
         return _project(emb, pattern)
 
-    # build the k runs on driver THREADS: each run's step
-    # checkpoint+count jobs are independent, so submitting them
-    # concurrently overlaps their cluster work (the per-run jobs were
-    # the delta path's serialized overhead) — the same pattern
-    # encode_triples uses for its two dictionary builds. Spark job
-    # submission is thread-safe; result order stays by run index.
-    from concurrent.futures import ThreadPoolExecutor
-
-    if k > 1:
-        with ThreadPoolExecutor(max_workers=min(k, 4)) as pool:
-            built = list(pool.map(_build_run, range(k)))
-    else:
-        built = [_build_run(i) for i in range(k)]
+    # build the k runs on driver THREADS: each run's step checkpoint
+    # jobs are independent, so submitting them concurrently overlaps
+    # their cluster work (the per-run jobs were the delta path's
+    # serialized overhead); result order stays by run index
+    built = side_by_side(
+        delta_p.sparkSession,
+        [functools.partial(_build_run, i) for i in range(k)],
+        max_workers=4,
+    )
     runs = [r for r in built if r is not None]
     if not runs:  # every edge's Δ scan was empty — no new match possible
         node_t = delta_p.schema["s"].dataType.simpleString()

@@ -7,6 +7,8 @@ collected. Reference: MotifCode.codelength (MotifCode.java:56-137).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, functions as F
 
 from motive_rdf_spark.functions.mdl import (
@@ -19,6 +21,7 @@ from motive_rdf_spark.functions.mdl import (
 from motive_rdf_spark.operators import degrees as deg
 from motive_rdf_spark.operators.prune import instance_triples_df
 from motive_rdf_spark.patterns import Pattern, var_col
+from motive_rdf_spark.threads import side_by_side
 
 
 #: driver-exact scoring densifies 3 int64 degree vectors; at the cap
@@ -102,54 +105,59 @@ def null_bits_arrays(degs_np: tuple, prior: Prior = Prior.ML) -> float:
     return edgelist_codelength(hists, prior)
 
 
-def _hist_of(df: DataFrame, col: str) -> Hist:
-    rows = df.groupBy(col).agg(F.count("*").alias("cnt")).collect()
-    return {int(r[col]): int(r["cnt"]) for r in rows}
+#: the instance-triple column of each template position, in output
+#: order: in-degree counts objects, out-degree subjects, relation
+#: degree predicates
+_TEMPLATE_COLS = ("o", "s", "p")
 
 
 def template_degree_hists(
     triples: DataFrame,
-    pattern: Pattern,
-    matches: DataFrame,
+    inst: DataFrame,
     n: int,
     r: int,
     degs: GraphDegrees | None = None,
 ) -> list[Hist]:
-    """Graph degree histograms after subtracting the degree contribution
-    of all instance triples, duplicates preserved (MotifCode.java:100-126:
-    SparseList.inc over Utils.allTriples, then lazy minus).
+    """[in, out, rel] graph degree histograms after subtracting the
+    degree contribution of the instance triples ``inst`` (s, p, o),
+    duplicates preserved (MotifCode.java:100-126: SparseList.inc over
+    Utils.allTriples, then lazy minus).
 
-    Spark shape: instance triples (projection-only explode of matches) →
-    per-id counts → full outer join with the graph's per-id degrees →
-    subtract → histogram. One shuffle per position; the three positions
-    are independent Spark actions and run concurrently from driver
-    threads (the scheduler interleaves their tiny stages).
+    ONE query for all three positions: stack (pos, id, w) rows — the
+    graph's degrees (+deg per id from ``degs``, or +1 per triple) and
+    the instance triples (-1 each) — then sum per (pos, id) and count
+    per (pos, deg). The per-id sum is the sparse form of the dense
+    ``degree - instance count`` subtraction; ids absent from both sides
+    are the implicit zeros added from the id-space size.
     """
-    from concurrent.futures import ThreadPoolExecutor
 
-    inst = instance_triples_df(pattern, matches).select("s", "p", "o")
-
-    def tmpl_hist(graph_deg: DataFrame, key: str, inst_col: str, space: int) -> Hist:
-        sub = inst.groupBy(F.col(inst_col).alias(key)).agg(F.count("*").alias("sub"))
-        joined = graph_deg.join(sub, key, "full_outer").select(
-            (F.coalesce(F.col("deg"), F.lit(0)) - F.coalesce(F.col("sub"), F.lit(0))).alias("deg")
+    def signed(df: DataFrame, pos: int, col: str, w) -> DataFrame:
+        return df.select(
+            F.lit(pos).alias("pos"), F.col(col).cast("long").alias("id"), w.cast("long").alias("w")
         )
-        h = _hist_of(joined, "deg")
+
+    if degs is None:
+        parts = [signed(triples, pos, c, F.lit(1)) for pos, c in enumerate(_TEMPLATE_COLS)]
+    else:
+        frames = (degs.in_deg, degs.out_deg, degs.rel_deg)
+        parts = [signed(d, pos, d.columns[0], F.col("deg")) for pos, d in enumerate(frames)]
+    parts += [signed(inst, pos, c, F.lit(-1)) for pos, c in enumerate(_TEMPLATE_COLS)]
+    rows = (
+        functools.reduce(DataFrame.unionAll, parts)
+        .groupBy("pos", "id")
+        .agg(F.sum("w").alias("deg"))
+        .groupBy("pos", "deg")
+        .agg(F.count("*").alias("cnt"))
+        .collect()
+    )
+    hists: list[Hist] = [{}, {}, {}]
+    for row in rows:
+        hists[row["pos"]][int(row["deg"])] = int(row["cnt"])
+    for h, space in zip(hists, (n, n, r)):
         covered = sum(h.values())
         if space > covered:
             h[0] = h.get(0, 0) + (space - covered)
-        return h
-
-    in_deg = degs.in_deg if degs else deg.in_degrees(triples)
-    out_deg = degs.out_deg if degs else deg.out_degrees(triples)
-    rel_deg = degs.rel_deg if degs else deg.rel_degrees(triples)
-    jobs = [
-        (in_deg, "node", "o", n),
-        (out_deg, "node", "s", n),
-        (rel_deg, "rel", "p", r),
-    ]
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        return list(pool.map(lambda a: tmpl_hist(*a), jobs))
+    return hists
 
 
 def variable_freq_hists(
@@ -159,20 +167,35 @@ def variable_freq_hists(
     (MotifCode.patternDegrees, MotifCode.java:247-269): for each variable,
     how often each bound value occurs across matches, collected as
     {frequency -> #values}. Node variables range over [0,n), predicate
-    variables over [0,r)."""
-    from concurrent.futures import ThreadPoolExecutor
+    variables over [0,r).
 
-    node_vars = set(pattern.node_vars)
-
-    def one(v: int) -> tuple[int, tuple[Hist, int]]:
-        freq = matches.groupBy(var_col(v)).agg(F.count("*").alias("f"))
-        return v, (_hist_of(freq, "f"), n if v in node_vars else r)
-
+    ONE query for all variables: explode each match into its (var,
+    value) pairs, count per (var, value), then count per (var, f)."""
     vs = list(pattern.variables)
     if not vs:
         return {}
-    with ThreadPoolExecutor(max_workers=min(len(vs), 6)) as pool:
-        return dict(pool.map(one, vs))
+    pairs = matches.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(v).alias("var"), F.col(var_col(v)).cast("long").alias("value"))
+                    for v in vs
+                ]
+            )
+        ).alias("x")
+    ).select("x.var", "x.value")
+    rows = (
+        pairs.groupBy("var", "value")
+        .agg(F.count("*").alias("f"))
+        .groupBy("var", "f")
+        .agg(F.count("*").alias("cnt"))
+        .collect()
+    )
+    hists: dict[int, Hist] = {v: {} for v in vs}
+    for row in rows:
+        hists[row["var"]][int(row["f"])] = int(row["cnt"])
+    node_vars = set(pattern.node_vars)
+    return {v: (hists[v], n if v in node_vars else r) for v in vs}
 
 
 def score_motif(
@@ -186,18 +209,24 @@ def score_motif(
     degs: GraphDegrees | None = None,
 ) -> MotifScore:
     """Full MotifCode.codelength pipeline over DataFrames. ``pruned_matches``
-    must already be overlap-pruned (operators/prune.py). The count,
-    template hists, and variable hists are independent actions over the
-    (persisted) match set, so they run concurrently."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_k = pool.submit(pruned_matches.count)
-        f_tmpl = pool.submit(
-            template_degree_hists, triples, pattern, pruned_matches, n, r, degs
-        )
-        f_var = pool.submit(variable_freq_hists, pattern, pruned_matches, n, r)
-        k, tmpl, var_h = f_k.result(), f_tmpl.result(), f_var.result()
+    must already be overlap-pruned (operators/prune.py). Two collects,
+    run side by side on driver threads: the template histograms and the
+    variable histograms. The instance count k is read off a variable
+    histogram (each variable's frequencies sum to the match count), so
+    only a variable-free pattern pays a ``count``."""
+    inst = instance_triples_df(pattern, pruned_matches).select("s", "p", "o")
+    tmpl, var_h = side_by_side(
+        pruned_matches.sparkSession,
+        [
+            lambda: template_degree_hists(triples, inst, n, r, degs),
+            lambda: variable_freq_hists(pattern, pruned_matches, n, r),
+        ],
+    )
+    if var_h:
+        hist, _ = next(iter(var_h.values()))
+        k = sum(f * c for f, c in hist.items())
+    else:
+        k = pruned_matches.count()
     return motif_codelength(tmpl, n, m, r, pattern, var_h, k, fast_py)
 
 
@@ -217,7 +246,7 @@ def score_motif_rows(
     id spaces fit ``GraphDegrees.driver_arrays``. The histogram algebra
     mirrors template_degree_hists/variable_freq_hists exactly: dense
     degree vector minus instance-triple contribution, then
-    value-histogram (the Spark path's full-outer-join + implicit-zeros
+    value-histogram (the Spark path's per-id signed sum + implicit-zeros
     logic is the sparse form of the same subtraction)."""
     import numpy as np
 

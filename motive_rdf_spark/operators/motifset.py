@@ -35,7 +35,7 @@ from motive_rdf_spark.functions.mdl import (
 from motive_rdf_spark.functions.mdl import edgelist_codelength, Prior
 from motive_rdf_spark.operators import degrees as deg
 from motive_rdf_spark.operators.bgp import find
-from motive_rdf_spark.operators.mdl_ops import _hist_of, variable_freq_hists
+from motive_rdf_spark.operators.mdl_ops import template_degree_hists, variable_freq_hists
 from motive_rdf_spark.operators.prune import (
     instance_triples_df,
     prune_matches,
@@ -245,24 +245,7 @@ def score_motif_set(
     else:
         inst_df = spark.createDataFrame([], "s long, p long, o long")
 
-    def tmpl_hist(graph_deg: DataFrame, key: str, inst_col: str, space: int):
-        sub = inst_df.groupBy(F.col(inst_col).alias(key)).agg(F.count("*").alias("sub"))
-        joined = graph_deg.join(sub, key, "full_outer").select(
-            (F.coalesce(F.col("deg"), F.lit(0)) - F.coalesce(F.col("sub"), F.lit(0))).alias(
-                "deg"
-            )
-        )
-        h = _hist_of(joined, "deg")
-        covered = sum(h.values())
-        if space > covered:
-            h[0] = h.get(0, 0) + (space - covered)
-        return h
-
-    template = [
-        tmpl_hist(deg.in_degrees(triples), "node", "o", n),
-        tmpl_hist(deg.out_degrees(triples), "node", "s", n),
-        tmpl_hist(deg.rel_degrees(triples), "rel", "p", r),
-    ]
+    template = template_degree_hists(triples, inst_df, n, r)
     bits += edgelist_codelength(template, Prior.COMPLETE_FAST)
 
     freqs = []

@@ -21,13 +21,14 @@ Two implementations:
   kept by the sequential scan iff every triple it claims is untaken by
   earlier kept instances — the round structure only batches decisions
   that are already order-independent), in O(longest conflict chain)
-  rounds, each one shuffle.
+  rounds, each one shuffle. The round that keeps every still-active
+  instance is the last, so a conflict-free match set takes one round.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from motive_rdf_spark.patterns import Pattern, var_col
 
@@ -141,18 +142,28 @@ def prune_matches_df(
     converged = False
     for _ in range(max_rounds):
         active = active.localCheckpoint(eager=True)  # cut lineage per round
-        if active.isEmpty():
-            converged = True
-            break
-        # rank-minimal on every triple among active instances
+        # rank-minimal on every triple among active instances; one flag
+        # row per active instance, so the checkpoint's observed count
+        # and minimum flag say whether anything is active and whether
+        # this round keeps all of it (no separate emptiness probe)
         wmin = active.groupBy("__t").agg(F.min("__rank").alias("__wrank"))
+        obs = Observation()
         flags = (
             active.join(wmin, "__t")
             .groupBy("__rank")
             .agg(F.min((F.col("__rank") == F.col("__wrank")).cast("int")).alias("__all_min"))
+            .observe(obs, F.count("*").alias("n"), F.min("__all_min").alias("lo"))
+            .localCheckpoint(eager=True)
         )
+        n_active, lo = obs.get["n"], obs.get["lo"]
+        if n_active == 0:
+            converged = True
+            break
         keep_now = flags.filter(F.col("__all_min") == 1).select("__rank")
         kept_ranks = keep_now if kept_ranks is None else kept_ranks.unionAll(keep_now)
+        if lo == 1:  # every active instance kept: none is left to decide
+            converged = True
+            break
         kept_ranks = kept_ranks.localCheckpoint(eager=True)
         # triples claimed by newly-kept instances are now taken: every
         # active instance touching one (including the kept ones) leaves

@@ -30,7 +30,7 @@ parallelism — the property the resume/scaling tests assert.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 SALT_BUCKETS = 64
 
@@ -58,24 +58,23 @@ def connected_components(
     ).unionAll(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
     sym = sym.filter(F.col("a") != F.col("b")).distinct().localCheckpoint(eager=True)
 
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-
     # convergence by monotonicity: every operation below is a min, so a
     # node's label never increases and the node set is fixed — any
-    # change strictly decreases sum(component). Comparing the sum
-    # across rounds costs one partial-aggregatable scan of the
-    # checkpointed labels (no join against the previous round's labels,
-    # which was a full extra shuffle per iteration). decimal(38,0)
-    # keeps the sum exact out to ~1e12 nodes x 1e12 ids.
-    def _label_sum(df: DataFrame):
-        return df.agg(F.sum(F.col("component").cast("decimal(38,0)"))).collect()[0][0]
+    # change strictly decreases sum(component). The sum rides on each
+    # round's checkpoint as an Observation (a partial aggregate the
+    # checkpoint job computes in passing): no extra job, and no join
+    # against the previous round's labels. decimal(38,0) keeps the sum
+    # exact out to ~1e12 nodes x 1e12 ids.
+    def _checkpoint_sum(df: DataFrame) -> tuple[DataFrame, object]:
+        obs = Observation()
+        df = df.observe(
+            obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("sum")
+        ).localCheckpoint(eager=True)
+        return df, obs.get["sum"]
 
-    prev_sum = _label_sum(labels)
+    labels, prev_sum = _checkpoint_sum(
+        sym.select(F.col("a").alias("node")).distinct().withColumn("component", F.col("node"))
+    )
     for it in range(max_iter):
         # propagate: each edge (a,b) offers label(a) to b. The labels
         # side is hinted shuffle-hash: at real scale it is far past any
@@ -110,8 +109,7 @@ def connected_components(
                     "component"
                 ),
             )
-        labels = new_labels.localCheckpoint(eager=True)
-        new_sum = _label_sum(labels)
+        labels, new_sum = _checkpoint_sum(new_labels)
         if new_sum == prev_sum:
             return labels
         prev_sum = new_sum

@@ -29,7 +29,11 @@ single-task bottleneck, no Python/Arrow round-trip.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Window, functions as F
+
+from motive_rdf_spark.threads import side_by_side
 
 
 def dense_ids(df: DataFrame, col: str, id_col: str = "id", num_partitions: int | None = None) -> DataFrame:
@@ -133,19 +137,17 @@ def encode_triples(
     # the session): each dense_ids run is a short chain of jobs, and
     # Spark schedules both chains' stages across executors at once —
     # halving the sequential per-job latency on the critical path
-    from concurrent.futures import ThreadPoolExecutor
-
-    jobs = {}
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        if node_dict is None:
-            nodes = mention_triples.select(F.col("subj").alias("term")).unionAll(
-                mention_triples.select(F.col("obj").alias("term"))
-            )
-            jobs["node"] = pool.submit(dense_ids_counted, nodes, "term")
-        if pred_dict is None:
-            jobs["pred"] = pool.submit(
-                dense_ids_counted, mention_triples.select(F.col("pred").alias("term")), "term"
-            )
+    builds = {}
+    if node_dict is None:
+        nodes = mention_triples.select(F.col("subj").alias("term")).unionAll(
+            mention_triples.select(F.col("obj").alias("term"))
+        )
+        builds["node"] = functools.partial(dense_ids_counted, nodes, "term")
+    if pred_dict is None:
+        builds["pred"] = functools.partial(
+            dense_ids_counted, mention_triples.select(F.col("pred").alias("term")), "term"
+        )
+    built = dict(zip(builds, side_by_side(mention_triples.sparkSession, list(builds.values()))))
     # the broadcast decision reuses the count dense_ids already made
     # (zero extra jobs); a storage-backed dictionary pays one cheap
     # columnar count. Freshly built SMALL dictionaries are checkpointed
@@ -154,15 +156,15 @@ def encode_triples(
     # checkpoint (a multi-GB materialization at real scale) and the
     # broadcast — their shuffle joins recompute only the in-partition
     # rank over the checkpointed distinct-terms base.
-    if "node" in jobs:
-        node_dict, n_terms = jobs["node"].result()
+    if "node" in built:
+        node_dict, n_terms = built["node"]
         node_bcast = n_terms <= BROADCAST_NODE_DICT_MAX_TERMS
         if node_bcast:
             node_dict = node_dict.localCheckpoint(eager=True)
     else:
         node_bcast = _dict_fits_broadcast(node_dict)
-    if "pred" in jobs:
-        pred_dict = jobs["pred"].result()[0].localCheckpoint(eager=True)
+    if "pred" in built:
+        pred_dict = built["pred"][0].localCheckpoint(eager=True)
 
     bs = node_dict.select(F.col("term").alias("subj"), F.col("id").alias("s"))
     bo = node_dict.select(F.col("term").alias("obj"), F.col("id").alias("o"))

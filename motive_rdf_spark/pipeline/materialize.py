@@ -30,20 +30,21 @@ processing order, which the ledger records.
 
 from __future__ import annotations
 
+import functools
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
 from motive_rdf_spark.pipeline.canonicalize import (
     canonical_entities,
-    connected_components,
     extend_components,
     rewrite_triples,
 )
 from motive_rdf_spark.pipeline.encode import dense_ids, encode_triples
 from motive_rdf_spark.pipeline.extract import extract_triples
 from motive_rdf_spark.pipeline.link import link_mentions
+from motive_rdf_spark.threads import side_by_side
 
 SAME_AS = "same_as"
 ENTITY_PREFIX = "entity::"
@@ -127,6 +128,12 @@ def extend_dict(existing: DataFrame | None, terms: DataFrame, col: str = "term")
 
 
 def _load_optional(spark: SparkSession, path: str) -> DataFrame | None:
+    # a missing table is checked on the file system, not by a failed
+    # read: a failed analysis also reaches the session's query
+    # listeners, which log it as an error
+    fs, jpath, _ = _hadoop_fs(spark, path)
+    if not fs.exists(jpath):
+        return None
     try:
         return spark.read.parquet(path)
     except Exception:
@@ -235,21 +242,29 @@ def run_snapshot(
     rep.stages["extract_link"] = round(time.time() - t0, 3)
 
     # --- dictionary extension (append-only, see module doc) -----------
-    t0 = time.time()
-    # localCheckpoint cuts the plan's file-source lineage so the new
-    # dict version can be committed below while the DF stays usable
-    node_dict = extend_dict(
-        st.load_dict("node_dict"),
-        strs.select(F.col("subj").alias("term")).unionAll(strs.select(F.col("obj").alias("term"))),
-    ).localCheckpoint(eager=True)
-    pred_dict = extend_dict(
-        st.load_dict("pred_dict"),
-        strs.select(F.col("pred").alias("term")),
-    ).localCheckpoint(eager=True)
-    # versioned commit: a crash here leaves the previous version intact
+    # the two dictionaries, each built and committed on its own driver
+    # thread. localCheckpoint cuts the plan's file-source lineage so the
+    # new dict version can be committed while the DF stays usable; the
+    # versioned commit means a crash leaves the previous version intact
     # (dict growth is idempotent on re-run)
-    st.write_dict(node_dict, "node_dict")
-    st.write_dict(pred_dict, "pred_dict")
+    t0 = time.time()
+
+    def extend_and_commit(table: str, terms: DataFrame) -> DataFrame:
+        d = extend_dict(st.load_dict(table), terms).localCheckpoint(eager=True)
+        st.write_dict(d, table)
+        return d
+
+    node_terms = strs.select(F.col("subj").alias("term")).unionAll(
+        strs.select(F.col("obj").alias("term"))
+    )
+    pred_terms = strs.select(F.col("pred").alias("term"))
+    node_dict, pred_dict = side_by_side(
+        spark,
+        [
+            functools.partial(extend_and_commit, "node_dict", node_terms),
+            functools.partial(extend_and_commit, "pred_dict", pred_terms),
+        ],
+    )
     rep.stages["encode_dict"] = round(time.time() - t0, 3)
 
     t0 = time.time()
@@ -261,78 +276,99 @@ def run_snapshot(
     rep.stages["encode"] = round(time.time() - t0, 3)
 
     # --- canonicalization (CC over same_as) ---------------------------
+    # two branches on driver threads, sharing only the same_as edges:
+    # the triples (snapshot-local CC, rewrite, write) and the
+    # entity-identity state (same_as edges, cross-snapshot canonical
+    # map). Triples stay materialized under their snapshot-local
+    # canonical ids; load_graph(canonical=True) upgrades them through
+    # the latest map at read time, so later merges apply retroactively
+    # without rewriting committed partitions.
     t0 = time.time()
+    n_written = Observation()
+
+    def write_triples(final: DataFrame) -> None:
+        final = final.dropDuplicates().withColumn("snapshot", F.lit(snapshot))
+        final = final.observe(n_written, F.count("*").alias("n"))
+        st.write(final, "triples", partition_by=["snapshot"])
+
     if same_as_id_row:
         said = int(same_as_id_row[0]["id"])
         sa_edges = enc.filter(F.col("p") == said).select(
             F.col("s").alias("src"), F.col("o").alias("dst")
         )
-        mapping = canonical_entities(sa_edges)
-        final = rewrite_triples(enc.filter(F.col("p") != said), mapping)
-        # persist the snapshot's same_as edges (entity-identity lineage)
-        # and fold them into the maintained cross-snapshot canonical map
-        # (incremental CC: contraction onto the previous map — cost
-        # bounded by this snapshot's edges, not the accumulated set).
-        # Triples stay materialized under their snapshot-local canonical
-        # ids; load_graph(canonical=True) upgrades them through the
-        # latest map at read time, so later merges apply retroactively
-        # without rewriting committed partitions.
-        st.write(
-            sa_edges.withColumn("snapshot", F.lit(snapshot)),
-            "same_as_edges",
-            partition_by=["snapshot"],
-        )
         prior_map = _latest_canonical_map(spark, st, before=snapshot)
-        if prior_map is None:
-            global_map = connected_components(sa_edges) if not sa_edges.isEmpty() else None
-        else:
-            global_map = extend_components(prior_map, sa_edges)
-        if global_map is not None:
+        # first snapshot: the canonical map IS this snapshot's CC, so it
+        # is computed once and shared by both branches
+        first_map = canonical_entities(sa_edges) if prior_map is None else None
+
+        def triples_branch() -> None:
+            mapping = first_map if first_map is not None else canonical_entities(sa_edges)
+            write_triples(rewrite_triples(enc.filter(F.col("p") != said), mapping))
+
+        def identity_branch() -> None:
             st.write(
-                global_map.withColumn("snapshot", F.lit(snapshot)),
-                "canonical_map",
+                sa_edges.withColumn("snapshot", F.lit(snapshot)),
+                "same_as_edges",
                 partition_by=["snapshot"],
             )
+            # incremental CC: contraction onto the previous map — cost
+            # bounded by this snapshot's edges, not the accumulated set
+            if prior_map is not None:
+                global_map = extend_components(prior_map, sa_edges)
+            else:
+                global_map = None if first_map.isEmpty() else first_map
+            if global_map is not None:
+                st.write(
+                    global_map.withColumn("snapshot", F.lit(snapshot)),
+                    "canonical_map",
+                    partition_by=["snapshot"],
+                )
+
+        side_by_side(spark, [triples_branch, identity_branch])
     else:
-        final = enc.select("s", "p", "o")
-    final = final.dropDuplicates().withColumn("snapshot", F.lit(snapshot))
-    st.write(final, "triples", partition_by=["snapshot"])
-    rep.n_triples = (
-        st.read("triples").filter(F.col("snapshot") == snapshot).count()
-    )
+        write_triples(enc.select("s", "p", "o"))
+    rep.n_triples = n_written.get["n"]
     rep.stages["canonicalize_write"] = round(time.time() - t0, 3)
 
     # --- lineage: per (snapshot, repo) counts + content checksum ------
-    lineage = (
-        strs.filter(F.col("repo").isNotNull())
-        .groupBy("repo")
-        .agg(
-            F.countDistinct("path").alias("n_files"),
-            F.count("*").alias("n_mentions"),
-            # order-insensitive checksum over per-row shas: xor via
-            # bit_xor of the sha's first 16 hex chars as a long
-            F.bit_xor(F.conv(F.substring("content_sha", 1, 15), 16, 10).cast("long")).alias("sha_xor"),
+    def write_lineage() -> None:
+        lineage = (
+            strs.filter(F.col("repo").isNotNull())
+            .groupBy("repo")
+            .agg(
+                F.countDistinct("path").alias("n_files"),
+                F.count("*").alias("n_mentions"),
+                # order-insensitive checksum over per-row shas: xor via
+                # bit_xor of the sha's first 16 hex chars as a long
+                F.bit_xor(F.conv(F.substring("content_sha", 1, 15), 16, 10).cast("long")).alias("sha_xor"),
+            )
+            .withColumn("snapshot", F.lit(snapshot))
         )
-        .withColumn("snapshot", F.lit(snapshot))
-    )
-    st.write(lineage, "lineage", partition_by=["snapshot"])
+        st.write(lineage, "lineage", partition_by=["snapshot"])
 
     # --- metrics ------------------------------------------------------
     metrics_rows = [
         (snapshot, stage, float(sec), int(rep.n_mentions)) for stage, sec in rep.stages.items()
     ]
-    metrics = spark.createDataFrame(
-        metrics_rows, "snapshot string, stage string, seconds double, rows long"
-    )
-    st.write(metrics, "metrics", partition_by=["snapshot"])
+
+    def write_metrics() -> None:
+        metrics = spark.createDataFrame(
+            metrics_rows, "snapshot string, stage string, seconds double, rows long"
+        )
+        st.write(metrics, "metrics", partition_by=["snapshot"])
 
     # --- incremental motif-support maintenance ------------------------
-    if motifs:
+    def maintain_supports() -> None:
         t0 = time.time()
         _maintain_motif_supports(spark, st, snapshot, motifs, rep)
         rep.stages["motif_supports"] = round(time.time() - t0, 3)
 
+    side_by_side(spark, [write_lineage, write_metrics] + ([maintain_supports] if motifs else []))
+
     # --- ledger commit (the checkpoint) -------------------------------
+    # last, once every branch above has returned: side_by_side raises
+    # a branch's error only after all of them finished, so a failed
+    # snapshot never gets a ledger row
     ledger = spark.createDataFrame(
         [(snapshot, rep.n_files, rep.n_triples, time.time())],
         "snapshot string, n_files long, n_triples long, committed_at double",

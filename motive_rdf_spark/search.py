@@ -35,6 +35,7 @@ should be ``persist()``-ed by the caller once and is only read.
 
 from __future__ import annotations
 
+import functools
 import random
 from dataclasses import dataclass, field, replace
 
@@ -53,6 +54,7 @@ from motive_rdf_spark.operators.mdl_ops import (
 )
 from motive_rdf_spark.operators.prune import prune_matches, prune_matches_df
 from motive_rdf_spark.patterns import Pattern, renumber
+from motive_rdf_spark.threads import side_by_side
 
 MAX_PATTERN_SIZE = 10  # edges (SimAnnealing.java:58)
 
@@ -504,8 +506,6 @@ def sa_parallel(
     wrapped in ONE shared GraphStore (pre-partitioned copies) so all
     chains' match jobs reuse it; the chains run in driver threads and
     the store is released on return."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from motive_rdf_spark.operators.bgp import GraphStore, prepare_triples
 
     base = config or SAConfig()
@@ -524,8 +524,9 @@ def sa_parallel(
         return sa.run()
 
     try:
-        with ThreadPoolExecutor(max_workers=chains) as pool:
-            states = list(pool.map(run_chain, range(chains)))
+        states = side_by_side(
+            plain.sparkSession, [functools.partial(run_chain, i) for i in range(chains)]
+        )
     finally:
         # all chains done: the degree-frame cache entry is shared (same
         # plan), so closing once after the barrier is safe

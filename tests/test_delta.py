@@ -178,3 +178,40 @@ def test_delta_cascades_broadcast_the_embedding(spark):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     out._delta_cached.unpersist()
+
+
+def test_delta_step_checkpoint_gated_on_joined_size(spark, monkeypatch):
+    """A hub fans a broadcast-small Δ out past BROADCAST_MAX_DELTA in
+    one join: the step checkpoint must hold at most the bound + 1 rows
+    (the probe), never the fanned-out embedding, and the result must
+    still satisfy find(old) ⊎ find_delta(old, Δ) = find(old ∪ Δ)."""
+    import motive_rdf_spark.operators.delta as delta_mod
+
+    bound = 5
+    hub = 0
+    # old: hub -[1]-> 100..139, each -[2]-> 200..239; Δ: 1..3 -[0]-> hub
+    old = spark.createDataFrame(
+        [(hub, 1, 100 + i) for i in range(40)] + [(100 + i, 2, 200 + i) for i in range(40)],
+        "s long, p long, o long",
+    ).cache()
+    delta = spark.createDataFrame([(i, 0, hub) for i in (1, 2, 3)], "s long, p long, o long")
+    pat = Pattern([(-1, 0, -2), (-2, 1, -3), (-3, 2, -4)])
+    DataFrame = type(old)  # the session's concrete DataFrame class
+    sizes = []
+    orig = DataFrame.localCheckpoint
+
+    def recording(self, *a, **kw):
+        out = orig(self, *a, **kw)
+        sizes.append(out.count())
+        return out
+
+    monkeypatch.setattr(delta_mod, "BROADCAST_MAX_DELTA", bound)
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    dm_df = find_delta(old, delta, pat)
+    monkeypatch.setattr(DataFrame, "localCheckpoint", orig)
+    dm = _ms(dm_df)
+    dm_df._delta_cached.unpersist()
+    assert sizes and max(sizes) <= bound + 1, sizes
+    assert sum(dm.values()) == 3 * 40
+    assert _ms(find(old, pat)) + dm == _ms(find(old.unionAll(delta), pat))
+    old.unpersist()

@@ -183,8 +183,10 @@ def test_prune_distributed_long_chain_fallback(spark):
 def test_driver_exact_scoring_equals_distributed(spark):
     """score_motif_rows (zero-Spark-job tier used by the search hot
     loop) must produce the exact histograms and total of the
-    distributed score_motif path — same rows, same graph, two
-    patterns (one with a predicate variable)."""
+    distributed score_motif path — same rows, same graph, with and
+    without precomputed degree frames, over a constant-predicate
+    pattern, a predicate-variable pattern, a pattern with a constant
+    node and an empty kept set (k = 0)."""
     from motive_rdf_spark.operators.mdl_ops import (
         GraphDegrees,
         score_motif,
@@ -193,22 +195,54 @@ def test_driver_exact_scoring_equals_distributed(spark):
 
     g = planted_graph(spark, 300, 700, 5, TRIANGLE, 30, seed=11).cache()
     gn, gm, gr = deg.graph_dims(g)
+    # a node bound to ?v2 by a triangle match: (?v1, 0, c), (?v1, 1, ?) matches
+    c = min(r["v2"] for r in find(g, Pattern(TRIANGLE)).collect())
     degs = GraphDegrees(g)
+    degs_np = degs.driver_arrays(gn, gr)
+    cases = [
+        (TRIANGLE, True),
+        ([(-1, -3, -2), (-2, 1, -1)], True),
+        ([(-1, 0, c), (-1, 1, -2)], True),  # constant node
+        (TRIANGLE, False),  # empty kept set
+    ]
     try:
-        for edges in (TRIANGLE, [(-1, -3, -2), (-2, 1, -1)]):
+        for edges, use_matches in cases:
             pat = Pattern(edges)
-            matches = find(g, pat)
-            kept = prune_matches(pat, sorted([list(x) for x in matches.collect()]))
-            if not kept:
-                continue
+            rows = sorted([list(x) for x in find(g, pat).collect()]) if use_matches else []
+            kept = prune_matches(pat, rows)
+            assert bool(kept) == use_matches, edges
             kept_df = spark.createDataFrame(
                 kept, ", ".join(f"v{i+1} long" for i in range(pat.num_vars))
             )
-            dist = score_motif(g, pat, kept_df, gn, gm, gr, degs=degs)
-            drv = score_motif_rows(
-                pat, kept, gn, gm, gr, degs.driver_arrays(gn, gr)
-            )
-            assert drv.total == pytest.approx(dist.total, abs=1e-9), (edges, drv, dist)
+            drv = score_motif_rows(pat, kept, gn, gm, gr, degs_np)
+            for d in (degs, None):
+                dist = score_motif(g, pat, kept_df, gn, gm, gr, degs=d)
+                assert drv.total == pytest.approx(dist.total, abs=1e-9), (edges, d, drv, dist)
     finally:
         degs.unpersist()
         g.unpersist()
+
+
+def test_prune_distributed_conflict_free_takes_one_round(spark, monkeypatch):
+    """On a match set whose instances share no triple, the distributed
+    fixpoint keeps everything in its first round and stops there: two
+    local checkpoints (the active claims and the round's flags), no
+    second round to find the active set empty."""
+    g = chain_graph(spark, 30)
+    pat = Pattern([(-1, 0, 0), (-2, 1, 1), (-1, 2, -2)])
+    matches = find(g, pat).persist()
+    rows = sorted([list(r) for r in matches.collect()])
+    DataFrame = type(matches)  # the session's concrete DataFrame class
+    calls = []
+    orig = DataFrame.localCheckpoint
+
+    def counting(self, *a, **kw):
+        calls.append(1)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    kept_df = sorted([list(r) for r in prune_matches_df(pat, matches).collect()])
+    monkeypatch.setattr(DataFrame, "localCheckpoint", orig)
+    assert kept_df == prune_matches(pat, rows) == rows
+    assert len(calls) == 2, calls
+    matches.unpersist()

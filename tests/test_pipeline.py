@@ -391,3 +391,28 @@ def test_dense_ids_single_exchange_plan(spark):
     d = df.select("term").repartitionByRange(4, F.col("term")).dropDuplicates(["term"])
     plan = d._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
+
+
+def test_snapshot_append_job_budget(spark, tmp_path):
+    """Appending the second snapshot of the 40-row fixture, with the
+    chain motif maintained, stays within its Spark job budget. Job
+    counts do not depend on load. Helper-thread jobs carry the
+    caller's job group, so the group holds every job of the commit."""
+    from motive_rdf_spark.patterns import Pattern
+
+    src = source_code_table(spark, 40, commits=2).drop("k")
+    cands = candidate_dict(spark, 40)
+    out = str(tmp_path / "kg")
+    snaps = sorted(r["commit"] for r in src.select("commit").distinct().collect())
+    motifs = {"chain": Pattern([(-1, 2, -2), (-2, 0, -3)])}
+    run_pipeline(spark, src, cands, out, snapshots=snaps[:1], motifs=motifs)
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-append-budget", "second snapshot")
+    try:
+        (rep,) = run_pipeline(spark, src, cands, out, snapshots=snaps[1:], motifs=motifs)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("snapshot-append-budget"))
+    assert not rep.skipped and rep.n_triples > 0
+    assert 0 < n_jobs <= 114, n_jobs

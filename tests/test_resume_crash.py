@@ -9,9 +9,10 @@ import os
 import subprocess
 import sys
 
-from pyspark.sql import functions as F
+import pytest
 
 from motive_rdf_spark.data.generators import candidate_dict, source_code_table
+from motive_rdf_spark.patterns import Pattern
 from motive_rdf_spark.pipeline.materialize import (
     load_graph,
     processed_snapshots,
@@ -34,45 +35,59 @@ def _cli(*args: str, timeout: int) -> subprocess.CompletedProcess:
     )
 
 
-def test_crash_before_ledger_commit_recovers(spark, tmp_path, monkeypatch):
+#: the chain motif the snapshot_append benchmark maintains
+CHAIN = Pattern([(-1, 2, -2), (-2, 0, -3)])
+
+
+def _rows(spark, path: str) -> list[tuple]:
+    return sorted(map(tuple, spark.read.parquet(path).drop("committed_at").collect()))
+
+
+@pytest.mark.parametrize("table", ["triples", "canonical_map", "motif_supports", "ledger"])
+def test_crash_before_ledger_commit_recovers(spark, tmp_path, monkeypatch, table):
+    """A crash in any write of snapshot 1 — one in each parallel branch
+    of the commit, or the ledger row itself — leaves snapshot 1 without
+    a ledger row, and the resumed run gives the same KG and the same
+    motif_supports rows as a clean run."""
     src = source_code_table(spark, 40, commits=2).drop("k")
     cands = candidate_dict(spark, 40)
     out = str(tmp_path / "kg")
     snaps = sorted(r["commit"] for r in src.select("commit").distinct().collect())
+    motifs = {"chain": CHAIN}
 
     # reference run: both snapshots cleanly
     ref_out = str(tmp_path / "ref")
-    run_pipeline(spark, src, cands, ref_out)
-    expected = sorted(map(tuple, load_graph(spark, ref_out).collect()))
+    run_pipeline(spark, src, cands, ref_out, motifs=motifs)
+    expected = sorted(map(tuple, load_graph(spark, ref_out, canonical=True).collect()))
 
-    # crash run: process snapshot 0, then simulate dying right before
-    # the ledger write of snapshot 1 by making the ledger path readonly
-    run_snapshot(spark, src, cands, out, snaps[0])
+    # crash run: process snapshot 0, then fail the chosen write of
+    # snapshot 1
+    run_snapshot(spark, src, cands, out, snaps[0], motifs=motifs)
 
     import motive_rdf_spark.pipeline.materialize as mat
 
     orig_write = mat._write
     def crashing_write(df, path, mode="overwrite", partition_by=None):
-        if path.endswith("/ledger"):
-            raise RuntimeError("simulated crash before checkpoint commit")
+        if path.endswith(f"/{table}"):
+            raise RuntimeError(f"simulated crash in the {table} write")
         return orig_write(df, path, mode, partition_by)
 
     monkeypatch.setattr(mat, "_write", crashing_write)
-    try:
-        run_snapshot(spark, src, cands, out, snaps[1])
-    except RuntimeError:
-        pass
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_snapshot(spark, src, cands, out, snaps[1], motifs=motifs)
     monkeypatch.setattr(mat, "_write", orig_write)
 
-    # snapshot 1's data partitions exist but it is NOT checkpointed
+    # snapshot 1's data partitions may exist but it is NOT checkpointed
     assert processed_snapshots(spark, out) == {snaps[0]}
 
     # resume: reprocesses snapshot 1 (dynamic overwrite), commits it
-    reports = run_pipeline(spark, src, cands, out)
+    reports = run_pipeline(spark, src, cands, out, motifs=motifs)
     assert [r.skipped for r in reports] == [True, False]
     assert processed_snapshots(spark, out) == set(snaps)
-    got = sorted(map(tuple, load_graph(spark, out).collect()))
+    got = sorted(map(tuple, load_graph(spark, out, canonical=True).collect()))
     assert got == expected
+    assert _rows(spark, f"{out}/motif_supports") == _rows(spark, f"{ref_out}/motif_supports")
+    assert _rows(spark, f"{out}/ledger") == _rows(spark, f"{ref_out}/ledger")
 
 
 def test_cli_construct_experiment(spark, tmp_path):
