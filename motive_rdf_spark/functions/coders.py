@@ -38,10 +38,13 @@ def log2(x: float) -> float:
     return math.log(x) / LN2
 
 
+@lru_cache(maxsize=1 << 12)
 def prefix(n: float) -> float:
     """Elias-delta-style prefix code length for a non-negative integer
     (kit ``Functions.prefix``; real-valued, as the reference treats
-    codelengths as doubles). Not bit-identical to kit — see module doc."""
+    codelengths as doubles). Not bit-identical to kit — see module doc.
+    Memoized: scoring asks for the same few hundred integers (degrees,
+    frequencies, graph dimensions) tens of thousands of times."""
     if n < 0:
         raise ValueError(n)
     x = n + 1.0

@@ -38,7 +38,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from motive_rdf_spark.patterns import Pattern, var_col
+from motive_rdf_spark.patterns import Pattern, greedy_order, var_col
 
 TID = "__tid"
 
@@ -180,31 +180,17 @@ def _order_edges(pattern: Pattern, start: int | None = None) -> list[int]:
     ``start`` when given — ``find_delta`` pins each run's Δ edge, the
     most selective relation by construction), then always pick a
     connected edge (shares a variable with what's bound) with the best
-    selectivity estimate. Constants count is the proxy: fewer variables
-    → more selective, and predicate constants help most.
+    selectivity estimate (``patterns.greedy_order``). Constants count
+    is the proxy: fewer variables → more selective, and predicate
+    constants help most.
     """
-    edges = list(pattern.edges)
     costs = [
         sum((t < 0) * (2.0 if pos != 1 else 1.0) for pos, t in enumerate(e))
-        for e in edges
+        for e in pattern.edges
     ]
     if start is not None:
         costs[start] = float("-inf")  # the pinned head wins the first pick
-
-    def edge_vars(e) -> set[int]:
-        return {t for t in e if t < 0}
-
-    remaining = set(range(len(edges)))
-    order: list[int] = []
-    bound: set[int] = set()
-    while remaining:
-        connected = [i for i in remaining if edge_vars(edges[i]) & bound]
-        pool = connected or sorted(remaining)
-        best = min(pool, key=lambda i: (costs[i], i))
-        order.append(best)
-        bound |= edge_vars(edges[best])
-        remaining.discard(best)
-    return order
+    return greedy_order(pattern, costs)
 
 
 def _injective(

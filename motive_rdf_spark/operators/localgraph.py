@@ -33,7 +33,13 @@ vectorized filters for repeated variables, node-variable injectivity
 and collidable-edge triple distinctness. Children keep their parent's
 order and each parent's candidates keep row order, so every level is
 in depth-first (pre-)order and rows come out exactly as a recursive
-depth-first enumeration would emit them.
+depth-first enumeration would emit them. The edge order is
+``patterns.greedy_order`` (the distributed matcher's loop) over exact
+constants-only row counts, memoized per edge on the immutable graph.
+
+Rows: a match set is one ``(k, num_vars)`` int64 matrix, and it stays
+one through the driver tier's prune (``operators/prune.py``) and score
+(``mdl_ops.score_motif_rows``); no candidate's rows become Python lists.
 
 Budgets: the step budget ``max_steps`` counts the candidate rows of
 each visited node, summed in depth-first order — a node is a partial
@@ -70,7 +76,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from motive_rdf_spark.patterns import Pattern
+from motive_rdf_spark.patterns import Pattern, greedy_order
 
 #: max triples collectable into a LocalGraph (see module docstring)
 LOCAL_GRAPH_LIMIT = 2_000_000
@@ -79,6 +85,10 @@ LOCAL_GRAPH_LIMIT = 2_000_000
 #: level. Of 2^12, 2^14 and 2^16, 2^14 matched fastest on unbudgeted
 #: search and exact rescoring over a 209k-triple skewed-degree graph.
 BLOCK_ROWS = 1 << 14
+
+#: most constants-only edge counts memoized per graph (``_order``); a
+#: search visits a few thousand distinct edges
+EDGE_COST_CACHE = 1 << 14
 
 # key shapes: which of (s, p, o) are bound
 _SHAPES = [(s, p, o) for s in (False, True) for p in (False, True) for o in (False, True)]
@@ -115,6 +125,7 @@ class LocalGraph:
         # distinct (s, p) codes: the (s, p, o) key packs their rank
         self._sp = np.unique(self.S * self._nr + self.P)
         self._index: dict[tuple[bool, bool, bool], tuple[np.ndarray, np.ndarray]] = {}
+        self._costs: dict[tuple, int] = {}
         for shape in _SHAPES:
             codes = self._code(shape, self.S, self.P, self.O, self.m)
             order = np.argsort(codes, kind="stable")
@@ -190,12 +201,13 @@ class LocalGraph:
         max_rows: int | None = None,
         deadline: float | None = None,
         max_steps: int | None = None,
-    ) -> tuple[list[list[int]], bool]:
+    ) -> tuple[np.ndarray, bool]:
         """All matches of ``pattern`` (see module docstring for the
-        contract), as rows of variable values in descending variable
-        order — the same layout as ``find(...)``'s v1..vk columns.
-        Returns (rows, timed_out); rows is a correct subset when
-        ``timed_out`` or when ``max_rows`` truncated enumeration.
+        contract), as a ``(k, num_vars)`` int64 matrix whose rows hold
+        variable values in descending variable order — the same layout
+        as ``find(...)``'s v1..vk columns. Returns (rows, timed_out);
+        rows is a correct subset when ``timed_out`` or when
+        ``max_rows`` truncated enumeration.
 
         Budgets: ``deadline`` (time.monotonic) mirrors the reference's
         wall-clock match budget: a match it stops returns the rows found
@@ -211,9 +223,9 @@ class LocalGraph:
         plan = self._plan(pattern)
         # a recursive enumeration stops right after its max_rows-th row
         cap = float("inf") if max_rows is None else max(max_rows, 1)
-        if deadline is not None and time.monotonic() > deadline:
-            return [], True
         width = pattern.num_vars
+        if deadline is not None and time.monotonic() > deadline:
+            return np.zeros((0, width), dtype=np.int64), True
         root = (np.zeros((1, width), dtype=np.int64), np.zeros((1, 0), dtype=np.int64))
         if max_steps is None:
             return self._find_blocks(plan, root, cap, deadline)
@@ -235,7 +247,7 @@ class LocalGraph:
             lb = lb + np.cumsum(cnt)
             keep = int(np.searchsorted(lb, max_steps, side="right"))
             if keep == 0 and len(lb):
-                return [], True  # every remaining row lies past the cut
+                return bind[:0], True  # every remaining row lies past the cut
             # the first node cut here (if any) stops the enumeration
             # before anything after it: charge its parent past budget
             overflow.append(int(parents[-1][keep]) if keep < len(lb) else -1)
@@ -262,7 +274,9 @@ class LocalGraph:
             own = costs[d] if d < len(plan) else 0
             prefix = prefix[par] + (before - before[first]) + own
         emitted = int(np.searchsorted(prefix, max_steps, side="right"))
-        rows = bind[: int(min(emitted, cap))].tolist()
+        # a copy: a view of the prefix would keep the whole level alive
+        # in callers that cache the rows (SimAnnealing's sample memo)
+        rows = bind[: int(min(emitted, cap))].copy()
         return rows, emitted < cap and int(sub[0][0]) > max_steps
 
     def _find_blocks(self, plan, root, cap, deadline):
@@ -271,17 +285,18 @@ class LocalGraph:
         frame's first block is as large as the rows still wanted, and
         each next one twice the last, so a small ``max_rows`` does not
         expand full blocks."""
-        out: list[list[int]] = []
+        out = [root[0][:0]]  # blocks of rows, concatenated on return
+        wanted = cap
 
         def frame(d, bind, used):
             lo, cnt = self._step_ranges(plan[d], bind)
-            size = int(min(BLOCK_ROWS, cap - len(out)))
+            size = int(min(BLOCK_ROWS, wanted))
             return [d, bind, used, lo, cnt, 0, int(cnt.sum()), size]
 
         stack = [frame(0, *root)]
         while stack:
             if deadline is not None and time.monotonic() > deadline:
-                return out, True
+                return np.concatenate(out), True
             top = stack[-1]
             d, bind, used, lo, cnt, pos, total, size = top
             if pos >= total:
@@ -291,12 +306,13 @@ class LocalGraph:
             top[5], top[7] = end, min(2 * size, BLOCK_ROWS)
             _, bind, used = self._expand(plan[d], bind, used, lo, cnt, pos, end)
             if d + 1 == len(plan):
-                out.extend(bind[: int(min(len(bind), cap - len(out)))].tolist())
-                if len(out) >= cap:
-                    return out, False
+                out.append(bind[: int(min(len(bind), wanted))])
+                wanted -= len(out[-1])
+                if wanted <= 0:
+                    return np.concatenate(out), False
             elif len(bind):
                 stack.append(frame(d + 1, bind, used))
-        return out, False
+        return np.concatenate(out), False
 
     def _step_ranges(self, step: _Step, bind: np.ndarray):
         n = len(bind)
@@ -374,29 +390,22 @@ class LocalGraph:
         return plan
 
     def _order(self, pattern: Pattern) -> list[int]:
-        """Greedy selective-first, connected-next edge order — the
-        greedy loop of bgp._order_edges, with exact constants-only
-        candidate counts from the indexes as the costs instead of its
-        constants-count proxy."""
-        edges = list(pattern.edges)
-        costs = [
-            len(self._rows(*(t if t >= 0 else None for t in e))) for e in edges
-        ]
+        """Greedy selective-first, connected-next edge order
+        (``patterns.greedy_order``, as in bgp._order_edges), with exact
+        constants-only candidate counts from the indexes as the costs
+        instead of the distributed tier's constants-count proxy."""
+        return greedy_order(pattern, [self._edge_cost(e) for e in pattern.edges])
 
-        def evars(e) -> set[int]:
-            return {t for t in e if t < 0}
-
-        remaining = set(range(len(edges)))
-        order: list[int] = []
-        bound: set[int] = set()
-        while remaining:
-            connected = [i for i in remaining if evars(edges[i]) & bound]
-            pool = connected or sorted(remaining)
-            best = min(pool, key=lambda i: (costs[i], i))
-            order.append(best)
-            bound |= evars(edges[best])
-            remaining.discard(best)
-        return order
+    def _edge_cost(self, edge) -> int:
+        """Rows matching ``edge``'s constants, memoized (bounded: the
+        memo starts over when full)."""
+        key = tuple(t if t >= 0 else None for t in edge)
+        cost = self._costs.get(key)
+        if cost is None:
+            if len(self._costs) >= EDGE_COST_CACHE:
+                self._costs.clear()
+            cost = self._costs[key] = len(self._rows(*key))
+        return cost
 
     # -- degree vectors (for driver-exact scoring) ---------------------
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import functools
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from motive_rdf_spark.functions.mdl import (
@@ -55,9 +56,8 @@ class GraphDegrees:
         if self._np_refused or max(n, r) > DRIVER_DEGREE_LIMIT:
             self._np_refused = True
             return None
-        import numpy as np
 
-        def dense(df: DataFrame, key: str, space: int) -> "np.ndarray":
+        def dense(df: DataFrame, key: str, space: int) -> np.ndarray:
             arr = np.zeros(space, dtype=np.int64)
             for row in df.collect():
                 arr[int(row[key])] = int(row["deg"])
@@ -76,11 +76,15 @@ class GraphDegrees:
 
 
 def null_bits(
-    triples: DataFrame, prior: Prior = Prior.ML, degs: GraphDegrees | None = None
+    triples: DataFrame,
+    prior: Prior = Prior.ML,
+    degs: GraphDegrees | None = None,
+    dims: tuple[int, int, int] | None = None,
 ) -> float:
     """EdgeListModel.codelength(KGraph.degrees(data), prior) — the null
-    model every motif competes against (RealWorld.java:62)."""
-    n, m, r = deg.graph_dims(triples)
+    model every motif competes against (RealWorld.java:62). ``dims``
+    are the graph's (n, m, r) when the caller already has them."""
+    n, m, r = dims or deg.graph_dims(triples)
     if degs is None:
         return edgelist_codelength(deg.degree_histograms(triples, n, r), prior)
     hists = [
@@ -96,13 +100,18 @@ def null_bits_arrays(degs_np: tuple, prior: Prior = Prior.ML) -> float:
     LocalGraph / driver-exact tier) — same histogram, zero Spark jobs.
     The dense vectors already carry the implicit zeros that
     deg.degree_histogram adds to the sparse collected form."""
-    import numpy as np
+    return edgelist_codelength([_dense_hist(arr) for arr in degs_np], prior)
 
-    hists: list[Hist] = []
-    for arr in degs_np:
-        vals, cnts = np.unique(arr, return_counts=True)
-        hists.append({int(v): int(c) for v, c in zip(vals, cnts)})
-    return edgelist_codelength(hists, prior)
+
+def _dense_hist(arr: np.ndarray) -> Hist:
+    """{value: count} of an int vector, ascending values: what
+    ``np.unique(arr, return_counts=True)`` gives, from one counting
+    pass instead of a sort (the values are degrees or frequencies, so
+    their range is small)."""
+    lo = int(arr.min(initial=0))
+    cnts = np.bincount(arr - lo if lo else arr)
+    vals = np.flatnonzero(cnts)
+    return dict(zip((vals + lo).tolist(), cnts[vals].tolist()))
 
 
 #: the instance-triple column of each template position, in output
@@ -232,7 +241,7 @@ def score_motif(
 
 def score_motif_rows(
     pattern: Pattern,
-    rows: list[list[int]],
+    rows,
     n: int,
     m: int,
     r: int,
@@ -247,14 +256,13 @@ def score_motif_rows(
     mirrors template_degree_hists/variable_freq_hists exactly: dense
     degree vector minus instance-triple contribution, then
     value-histogram (the Spark path's per-id signed sum + implicit-zeros
-    logic is the sparse form of the same subtraction)."""
-    import numpy as np
-
+    logic is the sparse form of the same subtraction). ``rows`` is the
+    ``(k, num_vars)`` match matrix (or a list of rows)."""
     in_arr, out_arr, rel_arr = degs_np
     k = len(rows)
     mat = np.asarray(rows, dtype=np.int64).reshape(k, pattern.num_vars)
 
-    def col(t: int) -> "np.ndarray":
+    def col(t: int) -> np.ndarray:
         # values[i] binds var -(i+1)  ->  var t < 0 is column -t-1
         return mat[:, -t - 1] if t < 0 else np.full(k, t, dtype=np.int64)
 
@@ -264,19 +272,14 @@ def score_motif_rows(
     sub_out = np.bincount(np.concatenate(s_parts), minlength=n)
     sub_rel = np.bincount(np.concatenate(p_parts), minlength=r)
     sub_in = np.bincount(np.concatenate(o_parts), minlength=n)
-
-    def hist_of(arr: "np.ndarray") -> Hist:
-        vals, cnts = np.unique(arr, return_counts=True)
-        return {int(v): int(c) for v, c in zip(vals, cnts)}
-
     tmpl = [
-        hist_of(in_arr - sub_in),
-        hist_of(out_arr - sub_out),
-        hist_of(rel_arr - sub_rel),
+        _dense_hist(in_arr - sub_in),
+        _dense_hist(out_arr - sub_out),
+        _dense_hist(rel_arr - sub_rel),
     ]
     node_vars = set(pattern.node_vars)
     var_h: dict[int, tuple[Hist, int]] = {}
     for i, v in enumerate(pattern.variables):
         freqs = np.unique(mat[:, i], return_counts=True)[1]
-        var_h[v] = (hist_of(freqs), n if v in node_vars else r)
+        var_h[v] = (_dense_hist(freqs), n if v in node_vars else r)
     return motif_codelength(tmpl, n, m, r, pattern, var_h, k, fast_py)

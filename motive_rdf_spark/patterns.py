@@ -148,6 +148,31 @@ class Pattern:
         return ", ".join(f"{t(s)} -[{t(p)}]-> {t(o)}" for s, p, o in self.edges)
 
 
+def greedy_order(pattern: Pattern, costs: list[float]) -> list[int]:
+    """Greedy left-deep join order of both matcher tiers: start from the
+    cheapest edge, then always take the cheapest edge that shares a
+    variable with what is bound (the cheapest remaining one when none
+    does); ties go to the lower edge index. Only the costs differ per
+    tier: ``bgp._order_edges`` passes a constants-count proxy,
+    ``LocalGraph`` exact constants-only row counts."""
+    edges = pattern.edges
+
+    def edge_vars(e) -> set[int]:
+        return {t for t in e if t < 0}
+
+    remaining = set(range(len(edges)))
+    order: list[int] = []
+    bound: set[int] = set()
+    while remaining:
+        connected = [i for i in remaining if edge_vars(edges[i]) & bound]
+        pool = connected or sorted(remaining)
+        best = min(pool, key=lambda i: (costs[i], i))
+        order.append(best)
+        bound |= edge_vars(edges[best])
+        remaining.discard(best)
+    return order
+
+
 def renumber(edges: list[tuple[int, int, int]]) -> Pattern:
     """Renumber variables of an arbitrary edge list into the reference's
     canonical id layout: node vars -1..-k in first-appearance order, then

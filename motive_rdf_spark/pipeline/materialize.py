@@ -232,12 +232,28 @@ def run_snapshot(
     matches (see _maintain_motif_supports)."""
     st = _storage(spark, out_dir, storage)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    cached: list[DataFrame] = []
+    try:
+        return _commit_snapshot(spark, st, source, candidates, snapshot, motifs, cached)
+    finally:
+        # also when a stage raised: a failed commit leaves no cached frame
+        for df in cached:
+            df.unpersist()
+
+
+def _commit_snapshot(
+    spark: SparkSession, st, source, candidates, snapshot: str, motifs, cached: list
+) -> SnapshotReport:
+    """``run_snapshot``'s stages; every frame it persists goes into
+    ``cached`` for the caller to release."""
     rep = SnapshotReport(snapshot)
     src = source.filter(F.col("commit") == snapshot).persist()
+    cached.append(src)
     rep.n_files = src.count()
 
     t0 = time.time()
     strs = build_string_triples(src, candidates).persist()
+    cached.append(strs)
     rep.n_mentions = strs.count()
     rep.stages["extract_link"] = round(time.time() - t0, 3)
 
@@ -272,6 +288,7 @@ def run_snapshot(
         strs.select("subj", "pred", "obj"), node_dict=node_dict, pred_dict=pred_dict
     )
     enc = enc.persist()
+    cached.append(enc)
     same_as_id_row = pred_dict.filter(F.col("term") == SAME_AS).collect()
     rep.stages["encode"] = round(time.time() - t0, 3)
 
@@ -374,8 +391,6 @@ def run_snapshot(
         "snapshot string, n_files long, n_triples long, committed_at double",
     )
     st.write(ledger, "ledger", mode="append")
-
-    src.unpersist(), strs.unpersist(), enc.unpersist()
     return rep
 
 

@@ -38,7 +38,9 @@ from __future__ import annotations
 import functools
 import random
 from dataclasses import dataclass, field, replace
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from motive_rdf_spark.canon import canonical_key
@@ -117,13 +119,26 @@ class SAState:
     timed_out_count: int = 0  # candidates whose matcher hit max_time_s
 
 
+class GraphStats(NamedTuple):
+    """A distributed-tier graph's statistics that every chain over it
+    shares: its (n, m, r) dims, persisted degree frames and null bits."""
+
+    dims: tuple[int, int, int]
+    degs: GraphDegrees
+    null_bits: float
+
+
 class SimAnnealing:
     def __init__(
         self,
         triples: DataFrame | LocalGraph,
         config: SAConfig | None = None,
         init_pattern: Pattern | None = None,
+        *,
+        stats: GraphStats | None = None,
     ):
+        """``stats`` (a graph above ``LOCAL_GRAPH_LIMIT`` only) hands
+        in what ``sa_parallel`` computed once for all its chains."""
         from motive_rdf_spark.operators.bgp import GraphStore
 
         self.cfg = config or SAConfig()
@@ -157,15 +172,17 @@ class SimAnnealing:
             else:
                 self._match_src = triples
             self.triples = triples
-            n, m, r = deg.graph_dims(triples)
+            n, m, r = stats.dims if stats else deg.graph_dims(triples)
             if m <= LOCAL_GRAPH_LIMIT:
                 self._local = LocalGraph.from_df(triples)
         if self._local is not None:
             self._local_degs = self._local.degree_arrays(n, r)
             nb = null_bits_arrays(self._local_degs)
+        elif stats is not None:
+            self._degs, nb = stats.degs, stats.null_bits
         else:
             self._degs = GraphDegrees(triples)
-            nb = null_bits(triples, degs=self._degs)
+            nb = null_bits(triples, degs=self._degs, dims=(n, m, r))
         self.state = SAState(null_bits=nb, n=n, m=m, r=r)
         # default start: a random triple with its object made a variable
         # (SimAnnealing.java:146-152); callers may seed a warm start
@@ -203,26 +220,25 @@ class SimAnnealing:
             if not probe:
                 result = (float("inf"), 0)
             elif len(probe) <= self.cfg.driver_prune_threshold:
-                rows = [list(r) for r in probe]
-                rows.sort()
-                kept = prune_matches(pattern, rows)
+                rows = np.array(probe, dtype=np.int64).reshape(len(probe), pattern.num_vars)
                 degs_np = self._degs.driver_arrays(st.n, st.r)
                 if degs_np is not None:
                     # driver-exact scoring: zero Spark jobs per candidate
-                    sc = score_motif_rows(
-                        pattern, kept, st.n, st.m, st.r, degs_np
+                    result = _score_rows(
+                        pattern, rows, st.n, st.m, st.r, degs_np, self.cfg.fast_py
                     )
                 else:
+                    kept = _prune_sorted(pattern, rows)
                     spark = self.triples.sparkSession
                     cols = [f"v{i + 1}" for i in range(pattern.num_vars)]
                     pruned = spark.createDataFrame(
-                        [tuple(x) for x in kept], ", ".join(f"{c} long" for c in cols)
+                        kept.tolist(), ", ".join(f"{c} long" for c in cols)
                     )
                     sc = score_motif(
                         self.triples, pattern, pruned, st.n, st.m, st.r,
                         fast_py=self.cfg.fast_py, degs=self._degs,
                     )
-                result = (sc.total, len(kept))
+                    result = (sc.total, len(kept))
             else:
                 pruned = prune_matches_df(pattern, matches)
                 sc = score_motif(
@@ -268,15 +284,9 @@ class SimAnnealing:
         )
         if timed_out:
             st.timed_out_count += 1
-        if not rows:
-            return (float("inf"), 0)
-        rows.sort()
-        kept = prune_matches(pattern, rows)
-        sc = score_motif_rows(
-            pattern, kept, st.n, st.m, st.r, self._local_degs,
-            fast_py=self.cfg.fast_py,
+        return _score_rows(
+            pattern, rows, st.n, st.m, st.r, self._local_degs, self.cfg.fast_py
         )
-        return (sc.total, len(kept))
 
     # -- initialization (SimAnnealing.java:146-152) ----------------------
 
@@ -322,19 +332,16 @@ class SimAnnealing:
                     max_steps=self.cfg.max_steps,
                 )
             else:
-                rows = (
-                    find(self._match_src, pattern)
-                    .limit(self.cfg.sample_rows)
-                    .collect()
-                )
+                got = find(self._match_src, pattern).limit(self.cfg.sample_rows).collect()
+                rows = np.array(got, dtype=np.int64).reshape(len(got), pattern.num_vars)
             # memoizing is behavior-preserving: both the limit() plan
             # and the local enumeration order are deterministic per
             # pattern, so a revisit re-collected the same rows anyway;
             # only the rng.choice varies per call
             self._sample_cache[key] = rows
-        if not rows:
+        if len(rows) == 0:
             return None
-        return list(self.rng.choice(rows))
+        return self.rng.choice(rows).tolist()
 
     # -- transitions (SimAnnealing.java:226-618) --------------------------
 
@@ -475,10 +482,29 @@ class SimAnnealing:
     def close(self) -> None:
         """Release the persisted degree frames (distributed tier only;
         the LocalGraph tier holds no Spark state). Not called from
-        run(): parallel chains share one cached copy (same plan), so
-        the owner of the last chain must close — sa_parallel does."""
+        run(); ``sa_parallel`` releases the frames its chains share."""
         if self._degs is not None:
             self._degs.unpersist()
+
+
+def _prune_sorted(pattern: Pattern, rows: np.ndarray) -> np.ndarray:
+    """The greedy prune of a match matrix in canonical order: rows
+    sorted lexicographically, the distributed prune's binding-key rank."""
+    return prune_matches(pattern, rows[np.lexsort(rows.T[::-1])])
+
+
+def _score_rows(
+    pattern: Pattern, rows: np.ndarray, n: int, m: int, r: int, degs_np: tuple,
+    fast_py: bool = True,
+) -> tuple[float, int]:
+    """(bits, frequency) of one candidate's match matrix on the driver:
+    canonical sort, greedy prune, exact MDL score; (inf, 0) when
+    nothing matched. Every driver-tier evaluation goes through here."""
+    if len(rows) == 0:
+        return (float("inf"), 0)
+    kept = _prune_sorted(pattern, rows)
+    sc = score_motif_rows(pattern, kept, n, m, r, degs_np, fast_py=fast_py)
+    return (sc.total, len(kept))
 
 
 def by_score(state: SAState, k: int) -> list[MotifResult]:
@@ -505,33 +531,30 @@ def sa_parallel(
     by ``sa_parallel_local``'s worker processes. A larger graph is
     wrapped in ONE shared GraphStore (pre-partitioned copies) so all
     chains' match jobs reuse it; the chains run in driver threads and
-    the store is released on return."""
+    share one set of ``GraphStats`` (``graph_dims`` runs once per
+    search), and the store and degree frames are released on return."""
     from motive_rdf_spark.operators.bgp import GraphStore, prepare_triples
 
     base = config or SAConfig()
     own_store = not isinstance(triples, GraphStore)
     plain = prepare_triples(triples) if own_store else triples.plain
-    if deg.graph_dims(plain)[1] <= LOCAL_GRAPH_LIMIT:
+    dims = deg.graph_dims(plain)
+    if dims[1] <= LOCAL_GRAPH_LIMIT:
         return sa_parallel_local(LocalGraph.from_df(plain), chains, base, init_pattern)
     src = GraphStore(triples) if own_store else triples
-
-    sas: list[SimAnnealing] = []
+    degs = GraphDegrees(src.plain)
 
     def run_chain(i: int) -> SAState:
         cfg = replace(base, seed=None if base.seed is None else base.seed + i)
-        sa = SimAnnealing(src, cfg, init_pattern=init_pattern)
-        sas.append(sa)
-        return sa.run()
+        return SimAnnealing(src, cfg, init_pattern=init_pattern, stats=stats).run()
 
     try:
+        stats = GraphStats(dims, degs, null_bits(src.plain, degs=degs, dims=dims))
         states = side_by_side(
             plain.sparkSession, [functools.partial(run_chain, i) for i in range(chains)]
         )
     finally:
-        # all chains done: the degree-frame cache entry is shared (same
-        # plan), so closing once after the barrier is safe
-        for sa in sas[:1]:
-            sa.close()
+        degs.unpersist()
         if own_store:
             src.unpersist()
 
@@ -616,12 +639,7 @@ def _det_score_one(res: MotifResult) -> MotifResult:
         # can exceed 1e8 raw rows — one such motif cost 30+ min and
         # ~40 GB before this guard existed.
         return MotifResult(res.pattern, float("inf"), len(rows))
-    if not rows:
-        return MotifResult(res.pattern, float("inf"), 0)
-    rows.sort()
-    kept = prune_matches(res.pattern, rows)
-    sc = score_motif_rows(res.pattern, kept, n, m, r, degs)
-    return MotifResult(res.pattern, sc.total, len(kept))
+    return MotifResult(res.pattern, *_score_rows(res.pattern, rows, n, m, r, degs))
 
 
 def rescore_exact(

@@ -29,6 +29,14 @@ def _graph(triples) -> LocalGraph:
     return LocalGraph(*(np.array(c, dtype=np.int64) for c in zip(*triples)))
 
 
+def _find(g: LocalGraph, pat: Pattern, **kw):
+    """``find_rows`` with its match matrix as the oracles' list of rows;
+    the matrix must be int64, one column per variable."""
+    rows, timed_out = g.find_rows(pat, **kw)
+    assert rows.dtype == np.int64 and rows.shape == (len(rows), pat.num_vars)
+    return rows.tolist(), timed_out
+
+
 def _random_case(rng: random.Random):
     """A random multigraph in shuffled row order (duplicates kept half
     the time) and a random pattern: node constants, predicate
@@ -59,7 +67,7 @@ def test_find_rows_equals_depth_first_oracle():
         for max_steps in MAX_STEPS:
             for max_rows in MAX_ROWS:
                 want = dfs_find_rows(g, pat, max_rows=max_rows, max_steps=max_steps)
-                got = g.find_rows(pat, max_rows=max_rows, max_steps=max_steps)
+                got = _find(g, pat, max_rows=max_rows, max_steps=max_steps)
                 assert got == want, (pat.edges, max_steps, max_rows)
                 truncated += want[1]
     assert truncated > 500  # the budgets did bite
@@ -77,7 +85,7 @@ def test_find_rows_small_blocks_equal_oracle(monkeypatch):
         for _ in range(120):
             g, pat = _random_case(rng)
             for max_rows in MAX_ROWS:
-                assert g.find_rows(pat, max_rows=max_rows) == dfs_find_rows(
+                assert _find(g, pat, max_rows=max_rows) == dfs_find_rows(
                     g, pat, max_rows=max_rows
                 ), (pat.edges, block, max_rows)
 
@@ -92,14 +100,14 @@ def test_find_rows_hub_does_not_materialize_level():
     want = dfs_find_rows(g, pat, max_rows=10)
     tracemalloc.start()
     try:
-        got = g.find_rows(pat, max_rows=10)
+        got = _find(g, pat, max_rows=10)
         peak = tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()
     assert got == want and len(got[0]) == 10 and not got[1]
     assert peak < 64 * 2**20, peak  # the full level would take >= 3.2 GB
     # a step budget bounds every level by itself
-    assert g.find_rows(pat, max_rows=10, max_steps=50_000) == dfs_find_rows(
+    assert _find(g, pat, max_rows=10, max_steps=50_000) == dfs_find_rows(
         g, pat, max_rows=10, max_steps=50_000
     )
 
@@ -127,44 +135,80 @@ def test_find_rows_deadline(monkeypatch):
     monkeypatch.setattr(lg_mod, "BLOCK_ROWS", 7)
     for reads in (2, 3, 10):
         monkeypatch.setattr(lg_mod, "time", _Clock())
-        rows, timed_out = g.find_rows(pat, deadline=reads + 0.5)
+        rows, timed_out = _find(g, pat, deadline=reads + 0.5)
         assert timed_out and rows == full[: len(rows)] and len(rows) < len(full)
         monkeypatch.setattr(lg_mod, "time", _Clock())
-        budgeted = g.find_rows(pat, deadline=1.5, max_steps=5_000)
+        budgeted = _find(g, pat, deadline=1.5, max_steps=5_000)
         assert budgeted == dfs_find_rows(g, pat, max_steps=5_000)
     for max_steps in (None, 5_000):
         monkeypatch.setattr(lg_mod, "time", _Clock())
-        assert g.find_rows(pat, deadline=0.5, max_steps=max_steps) == ([], True)
+        assert _find(g, pat, deadline=0.5, max_steps=max_steps) == ([], True)
 
 
-def test_prune_matches_equals_sequential_oracle():
+def _prune_both(pat: Pattern, rows: list, seen: set | None = None) -> list:
+    """``prune_matches`` on a list (must return a list) and on the same
+    rows as a matrix (must return a matrix) with equal results; with
+    ``seen``, both runs must leave it equally updated."""
+    seen_mat = None if seen is None else set(seen)
+    listed = prune_matches(pat, rows, seen=seen)
+    mat = prune_matches(pat, np.array(rows, dtype=np.int64).reshape(len(rows), -1), seen=seen_mat)
+    assert isinstance(listed, list) and all(isinstance(r, list) for r in listed)
+    assert isinstance(mat, np.ndarray) and mat.dtype == np.int64
+    assert mat.tolist() == listed and seen_mat == seen
+    return listed
+
+
+def test_prune_matches_equals_sequential_oracle(monkeypatch):
+    """Random match sets, shuffled with duplicates; vectorized rounds
+    only, the sequential scan only, and the default mix of both."""
+    import motive_rdf_spark.operators.prune as prune_mod
+
     rng = random.Random(5)
-    for _ in range(400):
-        g, pat = _random_case(rng)
-        rows, _ = g.find_rows(pat)
-        if not rows or not pat.variables:
-            continue
-        # duplicate rows and arbitrary order: the greedy is list-order
-        rows = rows + rng.sample(rows, min(len(rows), 3))
-        rng.shuffle(rows)
-        assert prune_matches(pat, rows) == sequential_prune(pat, rows)
-        # a shared ``seen`` set drops touching instances and is updated
-        graph_triples = list(zip(g.S.tolist(), g.P.tolist(), g.O.tolist()))
-        seen0 = set(rng.sample(graph_triples, 3))
-        got_seen, want_seen = set(seen0), set(seen0)
-        assert prune_matches(pat, rows, seen=got_seen) == sequential_prune(
-            pat, rows, seen=want_seen
-        )
-        assert got_seen == want_seen
+    for rounds in (prune_mod.ROUNDS, 0, 1, 10_000):
+        monkeypatch.setattr(prune_mod, "ROUNDS", rounds)
+        for _ in range(400):
+            g, pat = _random_case(rng)
+            rows, _ = _find(g, pat)
+            if not rows or not pat.variables:
+                continue
+            # duplicate rows and arbitrary order: the greedy is list-order
+            rows = rows + rng.sample(rows, min(len(rows), 3))
+            rng.shuffle(rows)
+            assert _prune_both(pat, rows) == sequential_prune(pat, rows)
+            # a shared ``seen`` set drops touching instances and is updated
+            graph_triples = list(zip(g.S.tolist(), g.P.tolist(), g.O.tolist()))
+            seen0 = set(rng.sample(graph_triples, 3))
+            got_seen, want_seen = set(seen0), set(seen0)
+            assert _prune_both(pat, rows, seen=got_seen) == sequential_prune(
+                pat, rows, seen=want_seen
+            )
+            assert got_seen == want_seen
 
 
 def test_prune_matches_long_conflict_chain():
     """A chain of instances each overlapping the next: every decision
-    depends on the one before it."""
+    depends on the one before it. A round settles two instances of it,
+    so the sequential scan finishes the chain after ``ROUNDS`` rounds,
+    also with triples taken beforehand in a shared ``seen``. Then a
+    star, every instance sharing one triple, and empty input."""
+    import motive_rdf_spark.operators.prune as prune_mod
+
     pat = Pattern([(-1, 0, -2), (-2, 0, -3)])
     rows = [[i, i + 1, i + 2] for i in range(300)]
-    assert prune_matches(pat, rows) == sequential_prune(pat, rows)
+    assert 4 * prune_mod.ROUNDS < len(rows)
+    assert _prune_both(pat, rows) == sequential_prune(pat, rows)
+    got_seen, want_seen = {(40, 0, 41), (3, 0, 4)}, {(40, 0, 41), (3, 0, 4)}
+    assert _prune_both(pat, rows, seen=got_seen) == sequential_prune(pat, rows, seen=want_seen)
+    assert got_seen == want_seen
+
+    star = Pattern([(-1, 0, -2), (-2, 1, -3)])
+    rows = [[7, 8, i] for i in range(50, 10, -1)]
+    assert _prune_both(star, rows) == sequential_prune(star, rows) == rows[:1]
+    assert _prune_both(star, rows, seen={(7, 0, 8)}) == []
+
     assert prune_matches(pat, []) == []
+    empty = prune_matches(pat, np.zeros((0, 3), dtype=np.int64))
+    assert isinstance(empty, np.ndarray) and empty.shape == (0, 3)
 
 
 # -- fixed-seed search, pinned ----------------------------------------

@@ -167,7 +167,8 @@ def test_localgraph_matches_bruteforce(pat, seed):
         return  # the search loop never scores fully grounded patterns
     rows, timed_out = lg.find_rows(pat)
     assert not timed_out
-    assert sorted(tuple(r) for r in rows) == expected
+    assert rows.dtype == np.int64 and rows.shape == (len(rows), pat.num_vars)
+    assert sorted(tuple(r) for r in rows.tolist()) == expected
 
 
 def test_localgraph_budget_and_cap():
@@ -184,12 +185,12 @@ def test_localgraph_budget_and_cap():
     )
     pat = Pattern([(-1, 0, -2)])
     full, _ = lg.find_rows(pat)
-    assert len(full) == 50
+    assert full.shape == (50, 2)
     capped, timed_out = lg.find_rows(pat, max_rows=7)
-    assert len(capped) == 7 and not timed_out
-    assert [tuple(r) for r in capped] == [tuple(r) for r in full[:7]]
+    assert capped.shape == (7, 2) and not timed_out
+    assert capped.tolist() == full[:7].tolist()
     partial, timed_out = lg.find_rows(pat, deadline=0.0)
-    assert timed_out and partial == []
+    assert timed_out and partial.shape == (0, 2)
     # incident pool: every triple touching node 3 (as s or o)
     inc = lg.incident(3, cap=10)
     assert set(inc) == {(3, 0, 4), (2, 0, 3)}

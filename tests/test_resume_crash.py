@@ -10,6 +10,7 @@ import subprocess
 import sys
 
 import pytest
+from test_bounded_cache import _cached
 
 from motive_rdf_spark.data.generators import candidate_dict, source_code_table
 from motive_rdf_spark.patterns import Pattern
@@ -73,9 +74,12 @@ def test_crash_before_ledger_commit_recovers(spark, tmp_path, monkeypatch, table
         return orig_write(df, path, mode, partition_by)
 
     monkeypatch.setattr(mat, "_write", crashing_write)
+    before = _cached(spark)
     with pytest.raises(RuntimeError, match="simulated crash"):
         run_snapshot(spark, src, cands, out, snaps[1], motifs=motifs)
     monkeypatch.setattr(mat, "_write", orig_write)
+    # the failed commit released the frames it cached
+    assert _cached(spark) == before
 
     # snapshot 1's data partitions may exist but it is NOT checkpointed
     assert processed_snapshots(spark, out) == {snaps[0]}

@@ -176,6 +176,48 @@ def test_sa_parallel_merges_chains(spark):
     g.unpersist()
 
 
+def test_sa_parallel_distributed_shares_graph_stats(spark, monkeypatch):
+    """Above ``LOCAL_GRAPH_LIMIT`` ``sa_parallel`` runs ``graph_dims``
+    once per search and hands every chain the same dims, degree frames
+    and null bits; the merged result equals that of chains which each
+    compute their own."""
+    from dataclasses import replace
+
+    from motive_rdf_spark import search
+    from motive_rdf_spark.operators import degrees
+    from motive_rdf_spark.operators.bgp import GraphStore
+
+    def summary(state):
+        res = sorted(
+            (str(r.pattern), r.score, r.frequency) for r in state.results.values()
+        )
+        return res, state.num_pos, state.timed_out_count
+
+    tri = [(-1, 0, -2), (-1, 1, -3), (-2, 2, -3)]
+    g = planted_graph(spark, n=300, m=900, r=5, pattern_edges=tri, k=60, seed=3).persist()
+    g.count()
+    monkeypatch.setattr(search, "LOCAL_GRAPH_LIMIT", -1)
+    cfg = SAConfig(iterations=3, seed=7, sample_rows=10)
+    store = GraphStore(g)
+    chains = [
+        SimAnnealing(store, replace(cfg, seed=cfg.seed + i), init_pattern=Pattern(tri))
+        for i in range(2)
+    ]
+    try:
+        want = summary(search._merge_states([sa.run() for sa in chains]))
+    finally:
+        chains[0].close()
+        store.unpersist()
+
+    calls = []
+    real = degrees.graph_dims
+    monkeypatch.setattr(degrees, "graph_dims", lambda t: calls.append(t) or real(t))
+    got = sa_parallel(g, chains=2, config=cfg, init_pattern=Pattern(tri))
+    assert len(calls) == 1
+    assert summary(got) == want
+    g.unpersist()
+
+
 def test_sa_dataframe_tier_equals_localgraph(spark):
     """Below LOCAL_GRAPH_LIMIT a DataFrame input takes the LocalGraph
     search path end to end: a cold-started chain picks its first triple
@@ -246,7 +288,7 @@ def test_rescore_exact_restores_det_ranking(spark):
     for x in out[:5]:
         rows, timed = lg.find_rows(x.pattern)
         assert not timed
-        rows.sort()
+        rows = sorted(rows.tolist())
         kept = prune_matches(x.pattern, rows)
         expect = score_motif_rows(x.pattern, kept, state.n, state.m, state.r, degs)
         assert x.score == expect.total

@@ -333,8 +333,7 @@ def run_dataset(spark, name: str, hdt_path: str, iterations: int, chains: int,
     # published row landing inside the union's det-top-25 is an
     # INTRUDER (a genuine search miss), one landing outside is
     # legitimately outscored by what we kept.
-    from motive_rdf_spark.operators.mdl_ops import score_motif_rows
-    from motive_rdf_spark.operators.prune import prune_matches
+    from motive_rdf_spark.search import _score_rows
 
     degs = graph.degree_arrays(state.n, state.r)
 
@@ -342,12 +341,9 @@ def run_dataset(spark, name: str, hdt_path: str, iterations: int, chains: int,
         # same row ceiling as rescore_exact: a published row that
         # truncates (none do on these fixtures) scores inf
         rows, _ = graph.find_rows(pat, max_rows=2_000_000)
-        if not rows or len(rows) >= 2_000_000:
+        if len(rows) >= 2_000_000:
             return float("inf")
-        rows.sort()
-        kept = prune_matches(pat, rows)
-        sc = score_motif_rows(pat, kept, state.n, state.m, state.r, degs)
-        return sc.total
+        return _score_rows(pat, rows, state.n, state.m, state.r, degs)[0]
 
     our25_keys = {canonical_key(r.pattern) for r in top25}
     displaced = [g for g in parsed[:25] if g["key"] not in our25_keys]
